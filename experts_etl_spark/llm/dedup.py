@@ -160,6 +160,19 @@ def with_max_df(
     return block.join(hot, key_col, "left_anti")
 
 
+def _checked_shingles(shingles: DataFrame, id_col: str) -> DataFrame:
+    """A caller-passed :func:`doc_shingles` frame, after checking it has
+    the ``(id_col, shingle)`` columns the miners read."""
+    missing = [c for c in (id_col, "shingle") if c not in shingles.columns]
+    if missing:
+        raise ValueError(
+            f"shingles frame lacks column(s) {missing}: expected the "
+            f"doc_shingles output ({id_col!r}, 'shingle'), got "
+            f"{shingles.columns}"
+        )
+    return shingles
+
+
 def ngram_jaccard_pairs(
     df: DataFrame, text_col: str, id_col: str, threshold: float,
     max_df: int | None = None,
@@ -178,11 +191,7 @@ def ngram_jaccard_pairs(
     sh = with_max_df(
         doc_shingles(df, text_col, id_col), "shingle", max_df
     ).localCheckpoint(eager=False)
-    # one row per doc, read by both size joins below — materialize the
-    # counting pass once instead of once per join side (guide §2.4)
-    sizes = sh.groupBy(id_col).agg(
-        F.count(F.lit(1)).alias("n_sh")
-    ).localCheckpoint(eager=False)
+    sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
     a = sh.alias("a")
     b = sh.alias("b")
     inter = (
@@ -242,7 +251,7 @@ def ngram_jaccard_pairs_prefix(
     from pyspark.sql import Window
 
     sh = (
-        shingles
+        _checked_shingles(shingles, id_col)
         if shingles is not None
         else doc_shingles(df, text_col, id_col).localCheckpoint(eager=False)
     )
@@ -257,16 +266,12 @@ def ngram_jaccard_pairs_prefix(
     # ceil guard: t·n that is mathematically an integer can round UP in
     # binary (0.55·20 → 11.000000000000002 → ceil 12), shortening the
     # prefix by one and breaking losslessness for pairs at exactly t.
-    # Materialized once: it feeds BOTH sides of the candidate self-join
-    # and Catalyst otherwise re-runs the df-count aggregation + both
-    # ranking windows per side (r14 plan audit: Windows 13/15 and 30/32
-    # were the same pass twice — guide §2.4).
     prefix = ranked.filter(
         F.col("rk")
         <= F.col("n_sh")
         - F.ceil(F.col("n_sh") * F.lit(threshold) - F.lit(1e-9))
         + 1
-    ).select(id_col, "shingle").localCheckpoint(eager=False)
+    ).select(id_col, "shingle")
     a = prefix.alias("a")
     b = prefix.alias("b")
     cands = (
@@ -277,11 +282,7 @@ def ngram_jaccard_pairs_prefix(
         )
         .distinct()
     )
-    # same sharing argument for the verify side: one collect_list pass,
-    # read by both the id1 and id2 joins
-    sets_ = sh.groupBy(id_col).agg(
-        F.collect_list("shingle").alias("shs")
-    ).localCheckpoint(eager=False)
+    sets_ = sh.groupBy(id_col).agg(F.collect_list("shingle").alias("shs"))
     s1 = sets_.select(F.col(id_col).alias("id1"), F.col("shs").alias("sh1"))
     s2 = sets_.select(F.col(id_col).alias("id2"), F.col("shs").alias("sh2"))
     verified = (
@@ -595,7 +596,7 @@ def signature_shingle_sets(
     broadcast exchanges.  ``shingles`` shares an already-materialized
     ``doc_shingles`` pass (see :func:`ngram_jaccard_pairs_prefix`)."""
     sh = (
-        shingles
+        _checked_shingles(shingles, id_col)
         if shingles is not None
         else doc_shingles(df, text_col, id_col)
     )

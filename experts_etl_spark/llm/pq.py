@@ -274,7 +274,10 @@ def pq_train(
     ``n_rows`` lets a caller that already counted the corpus share the
     scalar instead of re-paying the count action (the knob derivation
     is unchanged — same count, computed once per query: guide §1.2,
-    don't compute things twice).
+    don't compute things twice).  It MUST equal ``emb.count()``: it is
+    trusted, not checked, and a stale or partial count derives a
+    different ``code_mod``/``train_mod`` (different books) and skews
+    the sparse-id fallback check below.
 
     Seeds: the subvectors of every ``code_mod``-th vector (k ≈
     n/code_mod codewords per subspace; ``None`` self-scales to
@@ -689,10 +692,7 @@ def ivfpq_index(
     if code_mod is None:
         # ivf2_index already resolved the corpus count — reuse the
         # scalar instead of a second count action (guide §1.2)
-        code_mod = auto_code_mod(
-            stats.get("n_rows") if stats.get("n_rows") is not None
-            else emb.count()
-        )
+        code_mod = auto_code_mod(stats["n_rows"])
     # cell id + norm replicate onto the subvector rows and ride the
     # assignment's min_by struct out: the index build pays ZERO
     # corpus-sized joins (was two — onto resid for cent_id, onto the

@@ -373,14 +373,13 @@ def _sequential_keep(
     :func:`~experts_etl_spark.llm.curation.connected_components`
     discipline."""
     el = edges.select("lo", "hi").localCheckpoint(eager=False)
-    # r14 optimization note: restricting the fixpoint frames to edge
-    # ENDPOINTS (isolated vertices are provably kept in round one) was
-    # tried and MEASURED SLOWER at sf0.1 (curation_tick 10.8s → 16.4s
-    # adjacent A/B): the membership join + endpoint distinct cost more
-    # than the smaller per-round frames saved, and the extra lineage
-    # they pin into the round-1 materialization dominates.  Revisit
-    # only with a measured batch≫ε-graph corpus where the per-round
-    # frame size actually binds.
+    # the fixpoint frames carry EVERY vertex, not only edge endpoints
+    # (isolated vertices are provably kept in round one): the endpoint
+    # membership join + distinct costs more than the smaller per-round
+    # frames save (curation_tick_pipeline at sf0.1: 10.8 s → 16.4 s
+    # with endpoint frames).  Restricting to endpoints pays only when
+    # batch rows far outnumber ε-graph endpoints, so that per-round
+    # frame size is what binds.
     st = verts.select("_vid", F.lit("u").alias("_st")).localCheckpoint(
         eager=False
     )

@@ -19,9 +19,19 @@ composition of five driver-proven contracts, and the gated batch twin
 (``curation_tick_pipeline`` in llm/queries.py) hash-pins the
 composition itself against one independent SQL oracle.
 
-One pass over the batch text: the runner localCheckpoints the batch
-once; every stage reads the checkpoint (and its own store), never the
-source again.  Reject reasons are FIRST-MATCH in stage order
+One pass over the batch text, one run of each stage: a stage boundary
+that more than one consumer reads is materialized once
+(``localCheckpoint(eager=True)``) and every consumer reads the
+materialization.  The runner checkpoints the source batch (every stage
+and sink reads it), :func:`curation_tick` checkpoints the stage-2
+output (the semantic probe and fixpoint, substring cleaning and the
+routed join read it), and the runner checkpoints ``routed`` (every
+sink reads it).  A boundary left unmaterialized is not shared but
+re-run by each reader: under AQE even a lazy ``localCheckpoint``
+downstream executes its upstream shuffle stages when it is called, so
+each checkpoint, fixpoint round or action below an unmaterialized
+funnel pays the whole funnel, store joins included.  Reject reasons
+are FIRST-MATCH in stage order
 (low_quality → repetitive → duplicate → near_duplicate →
 semantic_duplicate), mirroring the batch funnel
 (``training_corpus_pipeline``) and ``run_streaming_curation``.
@@ -104,6 +114,9 @@ def curation_tick(
         staged, near_dup_threshold, index_signatures=index_signatures,
         lsh_max_df=lsh_max_df,
     )
+    # the stage-2 boundary: every stage below (semantic probe and
+    # fixpoint, substring cleaning, the routed join) reads it
+    staged = staged.localCheckpoint(eager=True)
 
     # stage 3: semantic dedup of the survivors' embeddings
     if emb_batch is not None:
@@ -238,7 +251,7 @@ def run_streaming_tick(
     every write overwrites its own partition — at-least-once replays
     are byte-idempotent (tests/test_streaming_tick.py)."""
     from experts_etl_spark.llm.curation import substring_window_store
-    from experts_etl_spark.llm.pq import pq_encode_incremental
+    from experts_etl_spark.llm.pq import auto_pq_m, pq_encode_incremental
 
     # --- production defaults (r13 verdict next #3) --------------------
     # Every 100 TB-posture property the rounds measured — bounded store
@@ -405,16 +418,23 @@ def run_streaming_tick(
                     spark_b, dirs["emb"], bits_cur,
                     sem_occupancy_limit, emb_meta_row,
                 )
-            # an all-rejected batch is a REAL state (a fully-duplicate
-            # crawl slice): nothing to encode, nothing to drift-check —
-            # skip the PQ leg instead of letting the m-resolution head
-            # read crash on an empty frame (both attempts of a replay
-            # skip identically, so idempotency holds)
-            if books_path is not None and kept_embs.first() is not None:
+            # ONE head read over the keepers' embeddings: its dimension
+            # resolves m for the encode and the drift measurement, and
+            # no row means an all-rejected batch — a REAL state (a
+            # fully-duplicate crawl slice) with nothing to encode or
+            # drift-check, so the PQ leg is skipped (both attempts of a
+            # replay skip identically, so idempotency holds)
+            probe = (
+                kept_embs.select(F.size("embedding").alias("d")).first()
+                if books_path is not None
+                else None
+            )
+            if probe is not None:
+                m = pq_m if pq_m is not None else auto_pq_m(int(probe["d"]))
                 books = spark_b.read.parquet(books_path)
                 (
                     pq_encode_incremental(
-                        kept_embs, books, "vec_id", "embedding", pq_m
+                        kept_embs, books, "vec_id", "embedding", m
                     )
                     .write.mode("overwrite")
                     .parquet(os.path.join(dirs["pq"], f"batch_id={batch_id}"))
@@ -436,7 +456,7 @@ def run_streaming_tick(
                         else pq_recon_ppm_threshold
                     )
                     ppm = pq_recon_ppm(
-                        kept_embs, books, "vec_id", "embedding", pq_m
+                        kept_embs, books, "vec_id", "embedding", m
                     )
                     if thr is None:
                         # "auto" with no measurement on record: the

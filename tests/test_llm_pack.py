@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import hashlib
 
+import pytest
 from pyspark.sql import functions as F
 
 from experts_etl_spark.llm.dedup import (
@@ -58,6 +59,33 @@ def test_ngram_jaccard_finds_near_dup(spark):
     assert got[(1, 2)] == 1.0
     assert (1, 3) in got and 0.4 <= got[(1, 3)] < 1.0
     assert not any(4 in p for p in got)
+
+
+def test_passed_shingles_frame_must_carry_id_and_shingle(spark):
+    """A caller-passed ``shingles`` frame is checked for the
+    (id, shingle) columns the miners read, at call time, with a
+    ValueError that names what is missing."""
+    from experts_etl_spark.llm.dedup import (
+        doc_shingles,
+        ngram_jaccard_pairs_prefix,
+        signature_shingle_sets,
+    )
+
+    df = docs_df(spark)
+    sh = doc_shingles(df, "text", "doc_id")
+    cases = (
+        # (shingles frame, id_col, column named in the error)
+        (sh.withColumnRenamed("shingle", "gram"), "doc_id", "'shingle'"),
+        (sh, "vec_id", "'vec_id'"),
+    )
+    for bad, id_col, missing in cases:
+        with pytest.raises(ValueError, match=missing):
+            ngram_jaccard_pairs_prefix(df, "text", id_col, 0.4, shingles=bad)
+        with pytest.raises(ValueError, match=missing):
+            signature_shingle_sets(df, "text", id_col, shingles=bad)
+    # a well-formed frame is accepted and mined as before
+    pairs = ngram_jaccard_pairs_prefix(df, "text", "doc_id", 0.4, shingles=sh)
+    assert (1, 2) in {(r.id1, r.id2) for r in pairs.collect()}
 
 
 def test_minhash_lsh_candidates_include_true_dups(spark):

@@ -4,8 +4,9 @@ rebuild) — r10 verdict missing #3 / next #7.
 
 Tick tests pin: cross-batch rejections from every store (exact
 fingerprint, MinHash signature, kept-embedding, hot-window), reason
-precedence, the PQ-index append for keepers, and at-least-once replay
-idempotency across ALL sinks at once.
+precedence, the PQ-index append for keepers, the Spark-job count of a
+store-probing tick (each shared stage boundary runs once), and
+at-least-once replay idempotency across ALL sinks at once.
 
 Rebuild tests pin: a drifted batch fires the retrain exactly once,
 the re-encoded index passes the write-audit-publish gate (post ppm
@@ -155,6 +156,15 @@ def _reasons(spark, env, batch_id):
     return out
 
 
+# Spark jobs of the store-probing second tick, measured on local[4] and
+# local[8]: 257-258 when the stage-1/2 funnel is left unmaterialized
+# (each semantic checkpoint, fixpoint round, substring pass and the
+# routed checkpoint re-runs it), 167-168 with the stage-2 boundary
+# materialized once and one PQ dimension probe.  The count moves by at
+# most one job from run to run.
+MAX_PROBING_TICK_JOBS = 200
+
+
 def test_tick_cross_batch_rejections_from_every_store(spark, tick_env, tmp_path):
     env = tick_env
     _land(tmp_path, env["src"], env["b1"], "b1")
@@ -163,7 +173,15 @@ def test_tick_cross_batch_rejections_from_every_store(spark, tick_env, tmp_path)
     assert r1 == {0: None, 1: None, 2: None, 3: None, 4: "low_quality"}
 
     _land(tmp_path, env["src"], env["b2"], "b2")
+    sched = spark.sparkContext._jsc.sc().dagScheduler()
+    jobs_before = sched.numTotalJobs()
     _run(spark, env)
+    jobs = sched.numTotalJobs() - jobs_before
+    assert jobs <= MAX_PROBING_TICK_JOBS, (
+        f"the store-probing tick ran {jobs} Spark jobs "
+        f"(bound {MAX_PROBING_TICK_JOBS}): a stage boundary that several "
+        "consumers read is being re-executed per consumer"
+    )
     r2 = _reasons(spark, env, 1)
     assert r2[10] == "duplicate"           # fingerprint store
     assert r2[11] == "near_duplicate"      # signature store
