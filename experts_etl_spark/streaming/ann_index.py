@@ -19,17 +19,26 @@ guarantee ``streaming/incremental.py`` pins for the merge sink).
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-# Floor for the AUTO drift threshold (r13 verdict next #3): 200,000 ppm
+from experts_etl_spark.llm.pq import (
+    pq_encode_incremental,
+    pq_recon_ppm,
+    pq_train,
+)
+from experts_etl_spark.streaming import stores as S
+
+# Floor for the AUTO drift threshold: 200,000 ppm
 # = 20% relative reconstruction error — comfortably above the intrinsic
 # PQ quantization error measured on every gated corpus (the k=64/256
 # books land at single-digit percent on the driver fixtures and the
 # clustered scale corpora), and far below a genuine distribution shift
 # (the gated drift fixtures and tools/selfmaint_probe.py's 1/128
-# rescale both measure ~1e6 ppm).  Every gated test and the
-# r12/r13-measured maintained-tick series ran at exactly this value.
+# rescale both measure ~1e6 ppm).  Every gated test and the measured
+# maintained-tick series ran at exactly this value.
 DEFAULT_PQ_RECON_PPM = 200_000
 
 
@@ -38,10 +47,7 @@ def _read_ppm(
 ) -> tuple[int, int] | None:
     """Latest (batch_id, ppm) record of a small audit/marker table, or
     None when the table is absent/empty."""
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(p) or not fs.listStatus(p):
+    if not S.child_names(spark, path):
         return None
     last = (
         spark.read.parquet(path)
@@ -52,26 +58,37 @@ def _read_ppm(
     return None if last is None else (int(last["batch_id"]), int(last[col]))
 
 
+def _write_intrinsic(
+    spark: SparkSession, intr_dir: str, batch_id: int, ppm: int
+) -> None:
+    """Record ``ppm`` as the measured intrinsic error anchor (the
+    ``_pq_intrinsic`` marker :func:`resolve_recon_threshold` reads)."""
+    spark.createDataFrame(
+        [(int(batch_id), int(ppm))], "batch_id bigint, ppm bigint"
+    ).write.mode("overwrite").parquet(intr_dir)
+
+
 def resolve_recon_threshold(
     spark: SparkSession, audit_dir: str, intrinsic_dir: str | None = None
 ) -> int | None:
     """The ``"auto"`` drift threshold, wired to the MEASURED intrinsic
-    error margin (r13 verdict next #3), latest measurement wins:
+    error margin, latest measurement wins:
 
     1. After any rebuild, the audit log's ``post_ppm`` IS the published
        books' full-corpus intrinsic reconstruction error (the rebuild
        computes it as the publish veto) → ``max(floor, 4 × latest
        post_ppm)``.
     2. Else, a ``_pq_intrinsic`` calibration marker (written by the
-       first tick that encoded against standing books — see the
-       callers) carries the first-contact measurement → ``max(floor,
+       first tick that encoded against standing books — see
+       :func:`pq_drift_step`) carries the first-contact measurement →
+       ``max(floor,
        4 × marker ppm)``.
     3. Else ``None``: no measurement exists yet — the caller must
        CALIBRATE (record this tick's ppm as the marker and skip the
        drift decision) rather than arm a floor that may sit below the
        corpus's intrinsic error, which would fire a futile same-data
        rebuild whose audit veto wedges the stream on every replay (the
-       exact wedge the r11 bootstrap exemption removed).
+       same wedge the ingest runner's bootstrap exemption avoids).
 
     The 4× margin keeps the trigger strictly above the books' own
     error with 2 bits of headroom, yet far under the ~1e6 ppm a real
@@ -120,14 +137,7 @@ def run_streaming_pq_encode(
     Per-tick cost is batch-proportional: the books are a fixed m·k-row
     broadcast, the batch never joins the standing index, and the write
     touches only the batch's own partition."""
-    from experts_etl_spark.llm.pq import pq_encode_incremental
-
     books = spark.read.parquet(books_path)
-    schema = spark.read.parquet(src).schema
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(src)
 
     def encode(batch: DataFrame, batch_id: int) -> None:
         out = pq_encode_incremental(batch, books, id_col, vec_col, m)
@@ -139,12 +149,9 @@ def run_streaming_pq_encode(
             .parquet(index_dir)
         )
 
-    (
-        stream.writeStream.foreachBatch(encode)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+    S.drain(
+        S.file_stream(spark, src, max_files_per_trigger), encode,
+        checkpoint_dir,
     )
 
 
@@ -193,26 +200,19 @@ def run_streaming_ivfpq_search(
         ivfpq_search,
     )
 
-    from experts_etl_spark.streaming.stores import read_store
-
     cells = spark.read.parquet(cells_path)
     books = spark.read.parquet(books_path)
     # segment-aware index read: a code table maintained by the
     # compacting ingest runner holds folded rows under _compacted
     # (invisible to a plain read — underscore dirs are hidden); flat
     # batch-built tables fall back to the plain read
-    idx_df = read_store(spark, index_path, drop_batch_id=True)
+    idx_df = S.read_store(spark, index_path, drop_batch_id=True)
     index = idx_df if idx_df is not None else spark.read.parquet(index_path)
     emb = spark.read.parquet(emb_path)
     if nprobe is None:
         nprobe = auto_nprobe(cells.count())
     if refine_mult is None:
         refine_mult = auto_refine_mult(emb.count(), k)
-    schema = spark.read.parquet(probes_src).schema
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(probes_src)
 
     def search(batch: DataFrame, batch_id: int) -> None:
         out = ivfpq_search(
@@ -227,12 +227,9 @@ def run_streaming_ivfpq_search(
             .parquet(out_dir)
         )
 
-    (
-        stream.writeStream.foreachBatch(search)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+    S.drain(
+        S.file_stream(spark, probes_src, max_files_per_trigger), search,
+        checkpoint_dir,
     )
 
 
@@ -264,9 +261,9 @@ def maybe_rebuild_pq_index(
     vetoes unless the FULL-CORPUS ``pq_recon_ppm`` is back under
     threshold and every archived id re-encoded, so sampled training
     carries zero quality risk.  A sampled rebuild that still misses
-    the threshold retries once with full Lloyd before vetoing (r12
-    ADVICE — a veto wedges the stream on every replay, so it must be
-    the last resort, not the first response to a degenerate sample).
+    the threshold retries once with full Lloyd before vetoing (a veto
+    wedges the stream on every replay, so it must be the last resort,
+    not the first response to a degenerate sample).
     The archive is compacted latest-batch-wins on ``id_col`` first: a
     re-arrived id is a correction, and fanning it out to two code rows
     would double-count it in the index; partitions whose every id was
@@ -283,23 +280,14 @@ def maybe_rebuild_pq_index(
     vetoing — the measured best-achievable ppm is recorded there and
     False returned, with the published index byte-untouched (see the
     veto branch).  Without it, the veto raises."""
-    import os
-
     from pyspark.sql import Window
 
-    from experts_etl_spark.llm.pq import (
-        pq_encode_incremental,
-        pq_recon_ppm,
-        pq_train,
-    )
     from experts_etl_spark.sources.sinks import overwrite_partitions
-
-    from experts_etl_spark.streaming.stores import read_store
 
     # segment-aware archive read: a compacted kept-embedding store
     # (streaming/stores.py) keeps batch_id as a column in its folded
     # segment, so latest-batch-wins compaction below works unchanged
-    raw = read_store(spark, arch_dir)
+    raw = S.read_store(spark, arch_dir)
     w = Window.partitionBy(id_col).orderBy(F.col("batch_id").desc())
     corpus = (
         raw.withColumn("_rn", F.row_number().over(w))
@@ -320,7 +308,7 @@ def maybe_rebuild_pq_index(
         # sampled books missed the bar (a pathological id space can
         # starve the stride sample even past pq_train's density
         # fallback): one full-Lloyd retry before wedging the stream on
-        # a veto that every replay would just re-hit (r12 ADVICE)
+        # a veto that every replay would just re-hit
         _, books2 = pq_train(
             corpus, id_col, vec_col, m, code_mod, iters, train_mod="full",
             n_rows=n_ids,
@@ -328,7 +316,7 @@ def maybe_rebuild_pq_index(
         books2 = books2.localCheckpoint(eager=True)
         post_ppm = pq_recon_ppm(corpus, books2, id_col, vec_col, m)
     if post_ppm > recon_ppm_threshold:
-        # pre-stage veto, STRICTLY read-only (r13 ADVICE): nothing —
+        # pre-stage veto, STRICTLY read-only: nothing —
         # codes, segments, books — has been touched yet.  An
         # AUTO-threshold caller (intrinsic_dir set) must not wedge the
         # stream on a corpus whose best ACHIEVABLE error sits above the
@@ -339,10 +327,7 @@ def maybe_rebuild_pq_index(
         # 4× anchor) PUBLISHES instead of vetoing.  Explicit-threshold
         # callers keep the hard veto (their threshold is a contract).
         if intrinsic_dir is not None:
-            spark.createDataFrame(
-                [(int(batch_id), int(post_ppm))],
-                "batch_id bigint, ppm bigint",
-            ).write.mode("overwrite").parquet(intrinsic_dir)
+            _write_intrinsic(spark, intrinsic_dir, batch_id, post_ppm)
             return False
         raise RuntimeError(
             f"PQ rebuild audit: post-rebuild ppm {post_ppm} still "
@@ -360,8 +345,8 @@ def maybe_rebuild_pq_index(
     ).join(
         corpus.select(F.col(id_col).alias("vec_id"), "batch_id"), "vec_id"
     )
-    # A COMPACTED codes store (streaming/stores.py:maybe_compact_store,
-    # r13 verdict next #7) holds folded code rows under _compacted with
+    # A COMPACTED codes store (streaming/stores.py:maybe_compact_store)
+    # holds folded code rows under _compacted with
     # a _folded watermark that read_store uses to IGNORE live
     # batch_id=N dirs at or below it.  The rebuild re-encodes the
     # ENTIRE archive into live partitions, so the old segment must go
@@ -372,17 +357,15 @@ def maybe_rebuild_pq_index(
     # still-drifting corpus re-fires the rebuild and re-publishes
     # everything (the same crash-window argument as the codes→books
     # ordering below).
-    from experts_etl_spark.streaming.stores import drop_segments
-
-    drop_segments(spark, codes_dir)
+    S.drop_segments(spark, codes_dir)
     overwrite_partitions(recoded, codes_dir, ["batch_id"], audit=_audit)
     # A batch whose every id is superseded by later batches contributes
     # ZERO staged rows, so overwrite_partitions leaves its old
     # codes/batch_id=N partition standing — rows encoded under the OLD
-    # books, duplicate vec_ids in the index (r12 ADVICE).  Delete the
-    # fully-superseded partitions AFTER the audit-gated publish (r13
-    # ADVICE: a veto inside the publish must leave the table
-    # byte-untouched, so the veto path stays strictly read-only): their
+    # books, duplicate vec_ids in the index.  Delete the
+    # fully-superseded partitions AFTER the audit-gated publish (a veto
+    # inside the publish must leave the table byte-untouched, so the
+    # veto path stays strictly read-only): their
     # ids' only current codes live in later partitions, so a crash
     # between publish and delete loses nothing — the replay re-fires
     # the rebuild (books are written last) and re-runs this sweep.
@@ -390,20 +373,9 @@ def maybe_rebuild_pq_index(
         int(r["batch_id"])
         for r in corpus.select("batch_id").distinct().collect()
     }
-    jvm = spark._jvm
-    codes_p = jvm.org.apache.hadoop.fs.Path(codes_dir)
-    fs = codes_p.getFileSystem(spark._jsc.hadoopConfiguration())
-    if fs.exists(codes_p):
-        for st in fs.listStatus(codes_p):
-            name = st.getPath().getName()
-            if not name.startswith("batch_id="):
-                continue
-            try:
-                bid = int(name.split("=", 1)[1])
-            except ValueError:
-                continue
-            if bid not in kept_batches:
-                fs.delete(st.getPath(), True)
+    for bid in S.live_batch_ids(spark, codes_dir):
+        if bid not in kept_batches:
+            S.delete_path(spark, f"{codes_dir}/batch_id={bid}")
     # audit the PUBLISHED table, not just the staged frame: every
     # archived id exactly once, with a uniform code-row fan-out (a
     # surviving stale partition would double some vec_id's rows)
@@ -436,6 +408,67 @@ def maybe_rebuild_pq_index(
     return True
 
 
+def pq_drift_step(
+    spark: SparkSession,
+    emb: DataFrame,
+    books: DataFrame,
+    *,
+    batch_id: int,
+    threshold: int | str,
+    m: int | None,
+    arch_dir: str,
+    codes_dir: str,
+    books_dir: str,
+    audit_dir: str,
+    intr_dir: str,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    code_mod: int | None = None,
+    iters: int = 2,
+) -> None:
+    """The drift decision for a batch just encoded against ``books`` —
+    the one step behind the composed tick and
+    :func:`run_streaming_pq_ingest_with_rebuild`.
+
+    Resolves ``threshold`` (``"auto"`` → :func:`resolve_recon_threshold`
+    over ``audit_dir`` and ``intr_dir``), measures the batch's
+    ``pq_recon_ppm`` at ``m``, and on drift (ppm above the threshold)
+    calls :func:`maybe_rebuild_pq_index` with the same ``m``.
+
+    First contact: ``"auto"`` with no measurement on record records
+    this batch's ppm in ``intr_dir`` as the intrinsic anchor and makes
+    no drift decision — a floor below the corpus's intrinsic error
+    would fire a futile rebuild whose veto wedges the stream, and a
+    replay re-measures the same ppm, so it writes the same marker and
+    again rebuilds nothing."""
+    auto = threshold == "auto"
+    thr = (
+        resolve_recon_threshold(spark, audit_dir, intr_dir)
+        if auto
+        else threshold
+    )
+    ppm = pq_recon_ppm(emb, books, id_col, vec_col, m)
+    if thr is None:
+        _write_intrinsic(spark, intr_dir, batch_id, ppm)
+    elif ppm > thr:
+        maybe_rebuild_pq_index(
+            spark,
+            arch_dir=arch_dir,
+            codes_dir=codes_dir,
+            books_dir=books_dir,
+            audit_dir=audit_dir,
+            batch_id=batch_id,
+            pre_ppm=ppm,
+            recon_ppm_threshold=thr,
+            id_col=id_col,
+            vec_col=vec_col,
+            m=m,
+            code_mod=code_mod,
+            iters=iters,
+            intrinsic_dir=intr_dir if auto else None,
+        )
+
+
 def run_streaming_pq_ingest_with_rebuild(
     spark: SparkSession,
     src: str,
@@ -448,11 +481,11 @@ def run_streaming_pq_ingest_with_rebuild(
     m: int | None = None,
     code_mod: int | None = None,
     iters: int = 2,
-    compact_after: int | None | str = "auto",
+    compact_after: int | None = S.DEFAULT_MAX_LIVE_PARTITIONS,
     max_files_per_trigger: int | None = None,
 ) -> None:
-    """Streaming PQ ingest with the REBUILD LOOP closed (r10 verdict
-    next #7): every arriving embedding batch encodes against the
+    """Streaming PQ ingest with the REBUILD LOOP closed: every arriving
+    embedding batch encodes against the
     standing codebooks, its reconstruction drift is measured
     (:func:`~experts_etl_spark.llm.pq.pq_recon_ppm` — the decision
     scalar behind the gated ``ann_pq_recon_error`` audit), and a batch
@@ -466,14 +499,14 @@ def run_streaming_pq_ingest_with_rebuild(
     operational model: encode-time never retrains; drift is a rebuild,
     and the rebuild is transactional.
 
-    ``recon_ppm_threshold`` DEFAULTS to ``"auto"`` (r13 verdict next
-    #3 — maintenance is the production posture, not an opt-in):
+    ``recon_ppm_threshold`` DEFAULTS to ``"auto"`` (maintenance is the
+    production posture, not an opt-in):
     resolved per tick via :func:`resolve_recon_threshold`, so after
     every rebuild the trigger re-anchors at 4× the books' measured
     intrinsic error.  Pass an int to pin it, or a very large int to
     effectively disable the drift check.
 
-    ``compact_after`` (default ``"auto"`` →
+    ``compact_after`` (default
     :data:`~experts_etl_spark.streaming.stores.DEFAULT_MAX_LIVE_PARTITIONS`)
     bounds BOTH per-tick stores' directory growth — the raw-embedding
     archive and the code table each gain one ``batch_id=N`` dir per
@@ -506,8 +539,7 @@ def run_streaming_pq_ingest_with_rebuild(
     row hashes), and the
     check only arms for a batch whose content differs — a raw
     batch-id marker would wrongly exempt the first batch of NEW data
-    arriving under a re-pointed checkpoint, whose ids restart at 0
-    (r12 ADVICE).
+    arriving under a re-pointed checkpoint, whose ids restart at 0.
 
     Rebuild training runs on the ``train_mod="auto"`` √n-style sample
     (:func:`~experts_etl_spark.llm.pq.auto_pq_train_mod`: ~16·k
@@ -528,38 +560,11 @@ def run_streaming_pq_ingest_with_rebuild(
     and re-encodes identically — the rebuild fires once, the books are
     a fixpoint of the replay (pinned in tests/test_streaming_tick.py).
     """
-    import os
-
-    from experts_etl_spark.llm.pq import (
-        pq_encode_incremental,
-        pq_recon_ppm,
-        pq_train,
-    )
-    from experts_etl_spark.sources.sinks import overwrite_partitions
-
     books_dir = os.path.join(index_dir, "_books")
     arch_dir = os.path.join(index_dir, "_embeddings")
     codes_dir = os.path.join(index_dir, "codes")
     audit_dir = os.path.join(index_dir, "_rebuilds")
     intr_dir = os.path.join(index_dir, "_pq_intrinsic")
-    if compact_after == "auto":
-        from experts_etl_spark.streaming.stores import (
-            DEFAULT_MAX_LIVE_PARTITIONS,
-        )
-
-        compact_after = DEFAULT_MAX_LIVE_PARTITIONS
-
-    schema = spark.read.parquet(src).schema
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(src)
-
-    def _exists(spark_b: SparkSession, path: str) -> bool:
-        jvm = spark_b._jvm
-        p = jvm.org.apache.hadoop.fs.Path(path)
-        return p.getFileSystem(spark_b._jsc.hadoopConfiguration()).exists(p)
-
     boot_marker = os.path.join(index_dir, "_bootstrap_batch")
 
     def _fingerprint(b: DataFrame) -> tuple[int, int]:
@@ -571,7 +576,7 @@ def run_streaming_pq_ingest_with_rebuild(
         checkpoint-relative batch_id: foreachBatch ids restart at 0
         with any fresh checkpoint dir, so a raw-id exemption would
         silently skip the drift check for the first batch of genuinely
-        NEW data in a re-pointed run (r12 ADVICE)."""
+        NEW data in a re-pointed run."""
         row = (
             b.select(
                 F.xxhash64(
@@ -588,10 +593,10 @@ def run_streaming_pq_ingest_with_rebuild(
 
     def _xor_hash(b: DataFrame) -> int:
         """The hash half of :func:`_fingerprint` alone — computed only
-        after the row-count half already matched (r13 ADVICE: the XOR
-        aggregate is a full-batch pass, so the routine post-bootstrap
-        tick should pay just the cheap count over the checkpointed
-        batch; the hash runs only on the rare count collision)."""
+        after the row-count half already matched (the XOR aggregate is
+        a full-batch pass, so the routine post-bootstrap tick should pay
+        just the cheap count over the checkpointed batch; the hash runs
+        only on the rare count collision)."""
         row = (
             b.select(
                 F.xxhash64(
@@ -613,7 +618,7 @@ def run_streaming_pq_ingest_with_rebuild(
             .write.mode("overwrite")
             .parquet(os.path.join(arch_dir, f"batch_id={batch_id}"))
         )
-        bootstrap = not _exists(spark_b, books_dir)
+        bootstrap = not S.path_exists(spark_b, books_dir)
         if bootstrap:
             _, books = pq_train(
                 batch, id_col, vec_col, m, code_mod, iters, train_mod="auto"
@@ -636,80 +641,53 @@ def run_streaming_pq_ingest_with_rebuild(
                 # the measured intrinsic error — record it so the auto
                 # threshold anchors at 4× measurement, never at a floor
                 # that might sit below it (resolve_recon_threshold)
-                ppm0 = pq_recon_ppm(batch, books, id_col, vec_col, m)
-                spark_b.createDataFrame(
-                    [(int(batch_id), int(ppm0))],
-                    "batch_id bigint, ppm bigint",
-                ).write.mode("overwrite").parquet(intr_dir)
+                _write_intrinsic(
+                    spark_b, intr_dir, batch_id,
+                    pq_recon_ppm(batch, books, id_col, vec_col, m),
+                )
             return  # intrinsic quantization error is not drift
-        if _exists(spark_b, boot_marker):  # absent on pre-marker indexes
+        if S.path_exists(spark_b, boot_marker):  # absent on old indexes
             boot_row = spark_b.read.parquet(boot_marker).first()
             if boot_row is not None:
                 d = boot_row.asDict()
                 if "n" in d and "h" in d:
                     # count first (cheap over the eager checkpoint),
-                    # XOR hash only on a count match — r13 ADVICE
+                    # XOR hash only on a count match
                     if int(d["n"]) == batch.count() and int(
                         d["h"]
                     ) == _xor_hash(batch):
                         return  # replay of the bootstrap CONTENT
                 elif int(d["batch_id"]) == batch_id:
-                    return  # legacy id-only marker (pre-r13 indexes)
-        thr = (
-            resolve_recon_threshold(spark_b, audit_dir, intr_dir)
-            if recon_ppm_threshold == "auto"
-            else recon_ppm_threshold
-        )
-        ppm = pq_recon_ppm(batch, books, id_col, vec_col, m)
-        if thr is None:
-            # auto on a legacy index with no calibration record: this
-            # first contact IS the calibration — record the measured
-            # ppm, make no drift decision (replay re-measures the same
-            # number, so the marker and the no-rebuild outcome are both
-            # replay-stable)
-            spark_b.createDataFrame(
-                [(int(batch_id), int(ppm))], "batch_id bigint, ppm bigint"
-            ).write.mode("overwrite").parquet(intr_dir)
-            return
-        if ppm <= thr:
-            return
-        maybe_rebuild_pq_index(
+                    return  # legacy id-only marker (older indexes)
+        pq_drift_step(
             spark_b,
+            batch,
+            books,
+            batch_id=batch_id,
+            threshold=recon_ppm_threshold,
+            m=m,
             arch_dir=arch_dir,
             codes_dir=codes_dir,
             books_dir=books_dir,
             audit_dir=audit_dir,
-            batch_id=batch_id,
-            pre_ppm=ppm,
-            recon_ppm_threshold=thr,
+            intr_dir=intr_dir,
             id_col=id_col,
             vec_col=vec_col,
-            m=m,
             code_mod=code_mod,
             iters=iters,
-            intrinsic_dir=(
-                intr_dir if recon_ppm_threshold == "auto" else None
-            ),
         )
 
     def ingest_and_compact(batch: DataFrame, batch_id: int) -> None:
         ingest(batch, batch_id)
         if compact_after is not None:
-            from experts_etl_spark.streaming.stores import (
-                maybe_compact_store,
-            )
-
-            spark_b = batch.sparkSession
             for path, key in ((arch_dir, id_col), (codes_dir, "vec_id")):
-                maybe_compact_store(
-                    spark_b, path, key,
+                S.maybe_compact_store(
+                    batch.sparkSession, path, key,
                     max_live_partitions=compact_after,
                 )
 
-    (
-        stream.writeStream.foreachBatch(ingest_and_compact)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+    S.drain(
+        S.file_stream(spark, src, max_files_per_trigger),
+        ingest_and_compact,
+        checkpoint_dir,
     )

@@ -16,9 +16,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-
-def _documents_schema(spark: SparkSession, src: str):
-    return spark.read.parquet(src).schema
+from experts_etl_spark.streaming import stores as S
 
 
 def route_documents(
@@ -133,7 +131,7 @@ def apply_near_dup(
     band volume against the store, never |index|²; in-batch pair
     mining is band-blocked and CC rounds = cluster diameter (2-3 for
     near-dup cliques).  ``lsh_max_df`` caps degenerate band keys out
-    of both joins (llm/dedup.py:LSH_MAX_DF — the r13-measured hot-band
+    of both joins (llm/dedup.py:LSH_MAX_DF — the measured hot-band
     ~n^1.5 verify term; production ticks should pass it, the gated
     batch twins pin the uncapped default)."""
     from experts_etl_spark.llm.curation import resolve_clusters
@@ -242,29 +240,16 @@ def run_streaming_curation(
     if sig_dir is None:
         sig_dir = os.path.join(keep_dir, "_signatures")
 
-    reader = spark.readStream.schema(_documents_schema(spark, src))
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    docs = reader.parquet(src)
-
     def curate(batch: DataFrame, batch_id: int) -> None:
         spark_b = batch.sparkSession
-        # Probe the fingerprint side table via the Hadoop FileSystem
-        # API: works on object-store/HDFS URIs (os.path is always False
-        # there) and — unlike a broad try/except around the read — keeps
-        # the dedup gate FAIL-CLOSED: only "path not there yet" skips
-        # the probe; a real read error (corrupt file, transient store
-        # failure) propagates instead of silently admitting duplicates.
-        from experts_etl_spark.streaming.stores import read_store
-
-        jvm = spark_b._jvm
-        hconf = spark_b._jsc.hadoopConfiguration()
-        keep_path = jvm.org.apache.hadoop.fs.Path(keep_dir)
-        fs = keep_path.getFileSystem(hconf)
-        # read_store carries the replay exclusion (batch_id != current)
-        # across BOTH segments of a compacted store (streaming/stores.py)
-        kept_fps = read_store(spark_b, fp_dir, exclude_batch_id=batch_id)
-        if kept_fps is None and fs.exists(keep_path):
+        # Fail-CLOSED probes of the fingerprint side table (stores.py):
+        # only "path not there yet" skips the probe; a real read error
+        # (corrupt file, transient store failure) propagates instead of
+        # silently admitting duplicates.  read_store carries the replay
+        # exclusion (batch_id != current) across BOTH segments of a
+        # compacted store.
+        kept_fps = S.read_store(spark_b, fp_dir, exclude_batch_id=batch_id)
+        if kept_fps is None and S.path_exists(spark_b, keep_dir):
             # Legacy keep_dir predating the side table: backfill it once
             # from the kept corpus (batch_id=-1 never collides with a
             # real micro-batch id), then probe compactly forever after.
@@ -283,7 +268,7 @@ def run_streaming_curation(
             legacy.write.mode("overwrite").parquet(
                 os.path.join(fp_dir, "batch_id=-1")
             )
-            kept_fps = read_store(
+            kept_fps = S.read_store(
                 spark_b, fp_dir, exclude_batch_id=batch_id
             )
         staged = route_documents(
@@ -293,7 +278,7 @@ def run_streaming_curation(
         )
         if near_dup_threshold is not None:
             # same at-least-once replay exclusion as the fp probe
-            store = read_store(
+            store = S.read_store(
                 spark_b, sig_dir, exclude_batch_id=batch_id,
                 drop_batch_id=True,
             )
@@ -353,10 +338,7 @@ def run_streaming_curation(
             .parquet(os.path.join(reject_dir, f"batch_id={batch_id}"))
         )
 
-    q = (
-        docs.writeStream.foreachBatch(curate)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    S.drain(
+        S.file_stream(spark, src, max_files_per_trigger), curate,
+        checkpoint_dir,
     )
-    q.awaitTermination()

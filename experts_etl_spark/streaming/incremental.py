@@ -8,7 +8,6 @@ monotonically increasing version.
 
 from __future__ import annotations
 
-import os
 from typing import Iterator
 
 import pandas as pd
@@ -16,6 +15,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import StructType
+
+from experts_etl_spark.streaming import stores as S
 
 
 def _events_schema(spark: SparkSession, src: str) -> StructType:
@@ -112,10 +113,12 @@ def run_incremental_consume(
         latest = compact_changes(batch, key="user_id", version_col="event_id")
         latest = latest.withColumn("part_key", part_key)
         spark_l = batch.sparkSession
-        if os.path.exists(target_dir) and os.listdir(target_dir):
-            if not any(
-                e.startswith("part_key=") for e in os.listdir(target_dir)
-            ):
+        # Hadoop-FS listing (stores.py): holds for URI targets, where
+        # os.path would report every target empty and the overwrite
+        # below would replace touched partitions with the batch alone
+        names = S.child_names(spark_l, target_dir)
+        if names:
+            if not any(e.startswith("part_key=") for e in names):
                 # Legacy unpartitioned target (written by a pre-layout
                 # version): the partition-pruned read below would fail on
                 # the missing part_key column.  Migrate once — read the
@@ -143,13 +146,7 @@ def run_incremental_consume(
         else:
             overwrite_partitions(latest, target_dir, ["part_key"])
 
-    (
-        deduped.writeStream.foreachBatch(consume)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    S.drain(deduped, consume, checkpoint_dir)
 
 
 def windowed_counts_frame(ev: DataFrame) -> DataFrame:

@@ -1,5 +1,19 @@
-"""Persisted-store lifecycle: compaction and retention (r12 verdict
-missing #1 / next #2 and #8).
+"""The streaming package's one I/O path: the micro-batch drain, the
+Hadoop-FS probes, and the persisted-store lifecycle (compaction and
+retention).
+
+**Drain.**  Every ``foreachBatch`` runner reads its source through
+:func:`file_stream` (schema read from the files already landed,
+optional ``maxFilesPerTrigger``) and runs through :func:`drain`
+(``foreachBatch`` + ``checkpointLocation`` + ``availableNow``, blocking
+until the pending files are consumed).
+
+**Filesystem probes.**  :func:`path_exists`, :func:`child_names` and
+:func:`delete_path` go through the Hadoop ``FileSystem`` of the path,
+so they hold for ``hdfs://``, ``s3a://`` and ``file://`` targets as
+well as plain local paths (``os.path`` is always False on a URI).  An
+existence probe is fail-closed: only "path not there yet" skips a
+read; a real read error propagates.
 
 Every streaming store in this package (``_fingerprints``,
 ``_signatures``, ``_window_counts``, ``_kept_embeddings``, the
@@ -62,6 +76,7 @@ at table granularity.
 from __future__ import annotations
 
 import uuid
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -70,8 +85,8 @@ COMPACTED = "_compacted"
 COMPACTED_NEXT = "_compacted_next"
 FOLDED_MARKER = "_folded"
 
-# Production lifecycle defaults (r13 verdict next #3 — the composed
-# tick arms compaction/retention by default).  64 live partitions:
+# Production lifecycle defaults (the composed tick arms compaction and
+# retention by default).  64 live partitions:
 # at a 4-hour cadence the fold fires ~every 11 days, the store's
 # directory count stays ≤ 64 + n_buckets forever, and the O(archive)
 # per-fold rewrite (see maybe_compact_store) is paid 1/64th as often
@@ -82,13 +97,42 @@ DEFAULT_MAX_LIVE_PARTITIONS = 64
 DEFAULT_RETAIN_DECISIONS = 64
 
 
+def file_stream(
+    spark: SparkSession, src: str, max_files_per_trigger: int | None = None
+) -> DataFrame:
+    """File-source stream over the parquet files landing under ``src``,
+    with the schema of the files already there."""
+    reader = spark.readStream.schema(spark.read.parquet(src).schema)
+    if max_files_per_trigger is not None:
+        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+    return reader.parquet(src)
+
+
+def drain(
+    stream: DataFrame,
+    fn: Callable[[DataFrame, int], None],
+    checkpoint_dir: str,
+) -> None:
+    """Run ``fn(batch, batch_id)`` on every pending micro-batch of
+    ``stream`` (``availableNow``) and return once they are consumed.
+    Delivery is at-least-once: a batch whose checkpoint commit was lost
+    is replayed with the same ``batch_id``."""
+    (
+        stream.writeStream.foreachBatch(fn)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
+
+
 def _fs(spark: SparkSession, path: str):
     jvm = spark._jvm
     p = jvm.org.apache.hadoop.fs.Path(path)
     return p.getFileSystem(spark._jsc.hadoopConfiguration()), p
 
 
-def _exists(spark: SparkSession, path: str) -> bool:
+def path_exists(spark: SparkSession, path: str) -> bool:
     fs, p = _fs(spark, path)
     return fs.exists(p)
 
@@ -98,15 +142,26 @@ def _child(spark: SparkSession, base: str, name: str):
     return jvm.org.apache.hadoop.fs.Path(base, name)
 
 
+def child_names(spark: SparkSession, path: str) -> list[str]:
+    """Names of the entries directly under ``path``; empty when it
+    does not exist."""
+    fs, p = _fs(spark, path)
+    if not fs.exists(p):
+        return []
+    return [st.getPath().getName() for st in fs.listStatus(p)]
+
+
+def delete_path(spark: SparkSession, path: str) -> None:
+    """Recursive delete; a missing path is a no-op."""
+    fs, p = _fs(spark, path)
+    fs.delete(p, True)
+
+
 def live_batch_ids(spark: SparkSession, store_dir: str) -> list[int]:
     """The ``batch_id`` values of the store's LIVE hive partitions
     (one filesystem listing; no parquet footers touched)."""
-    fs, p = _fs(spark, store_dir)
-    if not fs.exists(p):
-        return []
     out = []
-    for st in fs.listStatus(p):
-        name = st.getPath().getName()
+    for name in child_names(spark, store_dir):
         if name.startswith("batch_id="):
             try:
                 out.append(int(name.split("=", 1)[1]))
@@ -117,7 +172,7 @@ def live_batch_ids(spark: SparkSession, store_dir: str) -> list[int]:
 
 def _folded_through(spark: SparkSession, seg_dir: str) -> int | None:
     marker = f"{seg_dir}/{FOLDED_MARKER}"
-    if not _exists(spark, marker):
+    if not path_exists(spark, marker):
         return None
     row = spark.read.parquet(marker).first()
     return int(row["batch_id"]) if row is not None else None
@@ -133,11 +188,10 @@ def read_store(
     segment ∪ live partitions newer than the fold point, with the
     at-least-once replay exclusion applied as a COLUMN filter so it
     holds across the compaction boundary.  Returns ``None`` for a
-    store that does not exist yet (fail-closed FS probe, the
-    streaming/curation.py discipline)."""
+    store that does not exist yet (fail-closed FS probe)."""
     seg_dir = f"{store_dir}/{COMPACTED}"
-    has_seg = _exists(spark, seg_dir)
-    if not has_seg and _exists(spark, f"{store_dir}/{COMPACTED_NEXT}"):
+    has_seg = path_exists(spark, seg_dir)
+    if not has_seg and path_exists(spark, f"{store_dir}/{COMPACTED_NEXT}"):
         # crash between segment publish steps: a COMPLETE staged
         # segment is the store's current truth until the next
         # maybe_compact_store call commits it
@@ -179,11 +233,10 @@ def _commit_segment(spark: SparkSession, store_dir: str) -> None:
     """Publish a COMPLETE staged segment (``_folded`` present) and
     sweep the live directories it folded.  Idempotent — safe to call
     on every tick."""
-    fs, root = _fs(spark, store_dir)
-    if fs.exists(root):  # sweep trash a kill mid-publish left behind
-        for st in fs.listStatus(root):
-            if st.getPath().getName().startswith("._trash_"):
-                fs.delete(st.getPath(), True)
+    for name in child_names(spark, store_dir):
+        if name.startswith("._trash_"):  # a kill mid-publish left it
+            delete_path(spark, f"{store_dir}/{name}")
+    fs, _ = _fs(spark, store_dir)
     nxt = _child(spark, store_dir, COMPACTED_NEXT)
     if fs.exists(nxt):
         if _folded_through(spark, f"{store_dir}/{COMPACTED_NEXT}") is None:
@@ -204,7 +257,7 @@ def _commit_segment(spark: SparkSession, store_dir: str) -> None:
         return
     for b in live_batch_ids(spark, store_dir):
         if b <= folded:
-            fs.delete(_child(spark, store_dir, f"batch_id={b}"), True)
+            delete_path(spark, f"{store_dir}/batch_id={b}")
 
 
 def maybe_compact_store(
@@ -223,10 +276,9 @@ def maybe_compact_store(
     Cost when the trigger does not fire: one filesystem listing.  When
     it fires: one read + bucketed rewrite of old-compacted + live —
     **O(total archive) per fold**, because the whole compacted segment
-    is rewritten alongside the live rows (r13 ADVICE: the earlier
-    "~1/64th of the archive per tick" phrasing was wrong — the
-    amortized per-tick cost is ``archive_rows / max_live_partitions``,
-    which grows linearly with store lifetime, not a constant).  The
+    is rewritten alongside the live rows: the amortized per-tick cost
+    is ``archive_rows / max_live_partitions``, which grows linearly
+    with store lifetime, not a constant.  The
     directory-count bound (``max_live_partitions + n_buckets`` forever)
     and the probe-side listing win are unaffected.  Deployments whose
     fold cost becomes the binding term should raise
@@ -246,7 +298,7 @@ def maybe_compact_store(
     nxt_dir = f"{store_dir}/{COMPACTED_NEXT}"
     old = None
     n_old = 0
-    if _exists(spark, seg_dir):
+    if path_exists(spark, seg_dir):
         old = spark.read.parquet(seg_dir)
         old = old.select(
             *[c for c in old.columns if c != "part_key"]
@@ -265,16 +317,13 @@ def maybe_compact_store(
         F.pmod(F.xxhash64(F.col(key_col).cast("string")), F.lit(n_buckets))
         .cast("int"),
     )
-    fs, _ = _fs(spark, store_dir)
-    nxt_p = _child(spark, store_dir, COMPACTED_NEXT)
-    if fs.exists(nxt_p):
-        fs.delete(nxt_p, True)
+    delete_path(spark, nxt_dir)
     staged.write.partitionBy("part_key").mode("overwrite").parquet(nxt_dir)
     # AUDIT: the staged segment must carry every row before the marker
     # (= commit record) is written
     n_staged = spark.read.parquet(nxt_dir).count()
     if n_staged != n_old + n_live:
-        fs.delete(nxt_p, True)
+        delete_path(spark, nxt_dir)
         raise RuntimeError(
             f"store compaction audit: staged {n_staged} rows vs "
             f"{n_old} compacted + {n_live} live; publish vetoed"
@@ -289,18 +338,13 @@ def maybe_compact_store(
 def drop_segments(spark: SparkSession, store_dir: str) -> None:
     """Remove a store's compacted segment (committed and staged) so the
     caller can republish the WHOLE table as live ``batch_id=N``
-    partitions — the PQ rebuild's fold⊗rebuild composition (r13 verdict
-    next #7): the rebuild re-encodes every archived id, so the folded
-    code rows are wholly superseded, and a surviving ``_folded``
+    partitions — the PQ rebuild's fold⊗rebuild composition: the
+    rebuild re-encodes every archived id, so the folded code rows are
+    wholly superseded, and a surviving ``_folded``
     watermark would mask the republished live partitions at or below
     it from :func:`read_store`.  No-op when the store has no segment."""
-    fs, root = _fs(spark, store_dir)
-    if not fs.exists(root):
-        return
     for name in (COMPACTED, COMPACTED_NEXT):
-        p = _child(spark, store_dir, name)
-        if fs.exists(p):
-            fs.delete(p, True)
+        delete_path(spark, f"{store_dir}/{name}")
 
 
 def retain_partitions(
@@ -325,16 +369,13 @@ def retain_partitions(
         return 0
     if archive_dir is None:
         archive_dir = f"{sink_dir}/_archive"
-    fs, _ = _fs(spark, sink_dir)
-    arch_p = _fs(spark, archive_dir)[1]
-    if not fs.exists(arch_p):
-        fs.mkdirs(arch_p)
+    fs, arch_p = _fs(spark, archive_dir)
+    fs.mkdirs(arch_p)
     moved = 0
     for b in ids[: len(ids) - keep_last]:
         src = _child(spark, sink_dir, f"batch_id={b}")
         dst = _child(spark, archive_dir, f"batch_id={b}")
-        if fs.exists(dst):
-            fs.delete(dst, True)  # idempotent re-run after a crash
+        fs.delete(dst, True)  # idempotent re-run after a crash
         fs.rename(src, dst)
         moved += 1
     return moved

@@ -30,6 +30,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from experts_etl_spark.streaming import stores as S
+
 
 def run_streaming_substring_dedup(
     spark: SparkSession,
@@ -57,29 +59,14 @@ def run_streaming_substring_dedup(
     if store_dir is None:
         store_dir = os.path.join(out_dir, "_window_counts")
 
-    schema = spark.read.parquet(src).schema
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(src)
-
     def dedup(batch: DataFrame, batch_id: int) -> None:
         spark_b = batch.sparkSession
-        # fail-closed Hadoop-FS existence probe (streaming/curation.py
-        # discipline: only "not there yet" skips; read errors propagate)
-        jvm = spark_b._jvm
-        hconf = spark_b._jsc.hadoopConfiguration()
-        store_path = jvm.org.apache.hadoop.fs.Path(store_dir)
-        fs = store_path.getFileSystem(hconf)
-        if fs.exists(store_path):
-            store = spark_b.read.parquet(store_dir)
-            if "batch_id" in store.columns:
-                # at-least-once replay guard: batch N must not count
-                # its first attempt's windows toward the cap
-                store = store.filter(
-                    F.col("batch_id") != F.lit(batch_id)
-                ).drop("batch_id")
-        else:
+        # at-least-once replay guard: batch N must not count its first
+        # attempt's windows toward the cap
+        store = S.read_store(
+            spark_b, store_dir, exclude_batch_id=batch_id, drop_batch_id=True
+        )
+        if store is None:
             # empty store with the contract schema: first batch
             # thresholds on its own counts alone
             store = spark_b.createDataFrame([], "win string, sf bigint")
@@ -99,10 +86,7 @@ def run_streaming_substring_dedup(
             .parquet(os.path.join(store_dir, f"batch_id={batch_id}"))
         )
 
-    (
-        stream.writeStream.foreachBatch(dedup)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+    S.drain(
+        S.file_stream(spark, src, max_files_per_trigger), dedup,
+        checkpoint_dir,
     )

@@ -189,6 +189,52 @@ def test_incremental_consume_rewrites_only_touched_partitions(spark, tmp_path):
     assert [r.event_id for r in got] == [10_000]
 
 
+def test_incremental_consume_keeps_bucket_mates_on_uri_target(spark, tmp_path):
+    """A ``file://`` target merges exactly like a plain path: the
+    second wave's single update must not overwrite its ``part_key``
+    bucket with the batch alone and drop the users sharing it."""
+    import datetime
+    import glob
+    import shutil
+
+    feed = tmp_path / "feed"
+    feed.mkdir()
+    target = (tmp_path / "target").as_uri()
+    schema = "event_id bigint, ts timestamp, user_id bigint, event_type string, value double"
+    t0 = datetime.datetime(2024, 1, 1)
+
+    def land(rows, name, mtime):
+        stage = tmp_path / f"stage_{name}"
+        spark.createDataFrame(rows, schema).coalesce(1).write.parquet(str(stage))
+        (src,) = glob.glob(str(stage / "*.parquet"))
+        shutil.copy(src, feed / f"{name}.parquet")
+        os.utime(feed / f"{name}.parquet", (mtime, mtime))
+
+    def consume():
+        run_incremental_consume(
+            spark,
+            str(feed),
+            target_dir=target,
+            checkpoint_dir=str(tmp_path / "ckpt"),
+            n_partitions=8,
+        )
+
+    land([(i, t0, i, "seed", 1.0) for i in range(20)], "wave0", 1_700_000_000)
+    consume()
+    land(
+        [(10_000, t0 + datetime.timedelta(days=1), 5, "update", 9.0)],
+        "wave1",
+        1_700_000_060,
+    )
+    consume()
+    rows = {
+        r.user_id: r.event_id
+        for r in spark.read.parquet(target).select("user_id", "event_id").collect()
+    }
+    assert sorted(rows) == list(range(20))
+    assert rows[5] == 10_000
+
+
 def test_incremental_consume_migrates_legacy_unpartitioned_target(spark, tmp_path):
     """A target written by the pre-partitioned layout (flat parquet, no
     part_key= dirs) is migrated once into the hive-partitioned layout,

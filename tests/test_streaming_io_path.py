@@ -1,0 +1,49 @@
+"""Structural rule for ``experts_etl_spark/streaming/``: ``stores.py``
+owns the streaming I/O path.  No other module builds a Hadoop ``Path``,
+calls ``getFileSystem``, probes with ``os.path.exists``/``os.listdir``
+(always False/absent on ``hdfs://``, ``s3a://`` and ``file://``
+targets), or starts its own ``foreachBatch`` query; in ``stores.py``
+itself ``foreachBatch`` appears only inside :func:`drain`."""
+
+from __future__ import annotations
+
+import ast
+import glob
+import os
+
+import experts_etl_spark.streaming as streaming_pkg
+
+PKG_DIR = os.path.dirname(streaming_pkg.__file__)
+FORBIDDEN_CALLS = {"os.path.exists", "os.listdir", "org.apache.hadoop.fs.Path"}
+FORBIDDEN_ATTRS = {"getFileSystem", "foreachBatch"}
+
+
+def _violations(path: str) -> list[str]:
+    tree = ast.parse(open(path).read(), path)
+    is_stores = os.path.basename(path) == "stores.py"
+    allowed: set[int] = set()  # node ids inside stores.drain
+    if is_stores:
+        for fn in ast.walk(tree):
+            if isinstance(fn, ast.FunctionDef) and fn.name == "drain":
+                allowed |= {id(n) for n in ast.walk(fn)}
+    out = []
+    for node in ast.walk(tree):
+        if not isinstance(node, ast.Attribute):
+            continue
+        name = ast.unparse(node)
+        if is_stores:
+            if node.attr == "foreachBatch" and id(node) not in allowed:
+                out.append(f"{path}:{node.lineno} {name}")
+            continue
+        if node.attr in FORBIDDEN_ATTRS or any(
+            name.endswith(c) for c in FORBIDDEN_CALLS
+        ):
+            out.append(f"{path}:{node.lineno} {name}")
+    return out
+
+
+def test_streaming_io_goes_through_stores():
+    modules = sorted(glob.glob(os.path.join(PKG_DIR, "*.py")))
+    assert os.path.join(PKG_DIR, "stores.py") in modules
+    bad = [v for m in modules for v in _violations(m)]
+    assert not bad, "streaming I/O outside stores.py:\n" + "\n".join(bad)

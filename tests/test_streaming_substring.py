@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 
 from experts_etl_spark.llm.curation import substring_dedup
 from experts_etl_spark.sources import read_table
+from experts_etl_spark.streaming.stores import maybe_compact_store
 from experts_etl_spark.streaming.substring import (
     run_streaming_substring_dedup,
 )
@@ -120,3 +121,41 @@ def test_streaming_substring_cross_batch_hot_window(spark, tmp_path):
     assert got[10]["n_removed"] == 5
     assert got[10]["clean_text"] == "epsilon zeta"
     assert got[11]["n_removed"] == 0
+
+
+def test_streaming_substring_reads_a_compacted_window_store(spark, tmp_path):
+    """Batch 3 thresholds against the same counts whether batches 1-2
+    sit in live partitions or were folded into the store's compacted
+    segment."""
+    d = read_table(spark, SF_SMOKE, "documents").select("doc_id", "text")
+    n = d.count()
+    batches = [
+        d.filter(
+            (F.col("doc_id") >= i * n // 3)
+            & (F.col("doc_id") < (i + 1) * n // 3)
+        )
+        for i in range(3)
+    ]
+    cols = ["batch_id", "doc_id", "n_words", "n_removed", "clean_text"]
+
+    def run(name, fold):
+        src_dir = tmp_path / f"src_{name}"
+        src_dir.mkdir()
+        out_dir = str(tmp_path / f"out_{name}")
+        args = (spark, str(src_dir), out_dir, str(tmp_path / f"ckpt_{name}"))
+        for i, b in enumerate(batches):
+            if i == 2 and fold:
+                assert maybe_compact_store(
+                    spark, f"{out_dir}/_window_counts", "win",
+                    max_live_partitions=1,
+                )
+            _land(tmp_path, src_dir, b, f"{name}_b{i}")
+            run_streaming_substring_dedup(*args)
+        return sorted(
+            map(tuple, spark.read.parquet(out_dir).select(*cols).collect())
+        )
+
+    folded = run("folded", fold=True)
+    assert folded == run("live", fold=False)
+    # the third batch is the one that read the folded store
+    assert {r[0] for r in folded} == {0, 1, 2}
