@@ -50,7 +50,10 @@ def _read_ppm(
     if not S.child_names(spark, path):
         return None
     last = (
-        spark.read.parquet(path)
+        # both tables are written as (batch_id bigint, ..., <col> bigint):
+        # naming the columns read spares a schema-inference job
+        spark.read.schema(f"batch_id bigint, {col} bigint")
+        .parquet(path)
         .orderBy(F.col("batch_id").desc())
         .select("batch_id", col)
         .first()

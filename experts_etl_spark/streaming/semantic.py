@@ -69,12 +69,13 @@ from experts_etl_spark.streaming import stores as S
 # re-widen and the probe accepts the residual linear term, exactly as
 # a capped-nlist IVF does.)
 DEFAULT_OCCUPANCY_LIMIT = 32
+META_SCHEMA = "bits int, n_kept bigint"
 
 
 def _read_meta(spark: SparkSession, meta_dir: str) -> tuple[int, int] | None:
     if not S.path_exists(spark, meta_dir):
         return None
-    row = spark.read.parquet(meta_dir).first()
+    row = spark.read.schema(META_SCHEMA).parquet(meta_dir).first()
     if row is None:
         return None
     return int(row["bits"]), int(row["n_kept"])
@@ -84,7 +85,7 @@ def _write_meta(
     spark: SparkSession, meta_dir: str, bits: int, n_kept: int
 ) -> None:
     spark.createDataFrame(
-        [(int(bits), int(n_kept))], "bits int, n_kept bigint"
+        [(int(bits), int(n_kept))], META_SCHEMA
     ).write.mode("overwrite").parquet(meta_dir)
 
 

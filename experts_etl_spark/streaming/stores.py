@@ -8,6 +8,15 @@ optional ``maxFilesPerTrigger``) and runs through :func:`drain`
 (``foreachBatch`` + ``checkpointLocation`` + ``availableNow``, blocking
 until the pending files are consumed).
 
+**Concurrent legs.**  :func:`_concurrently` is the one place the
+package starts threads: a micro-batch runs its independent store I/O
+(probes, sink writes, maintenance) as legs side by side, each on its
+own thread that carries a copy of the micro-batch thread's Spark local
+properties (``pyspark.util.inheritable_thread_target``), so every job a
+leg fires belongs to the stream's job group.  It waits for every leg
+and re-raises the first failure, so a failed leg fails the micro-batch
+and the drain replays it.
+
 **Filesystem probes.**  :func:`path_exists`, :func:`child_names` and
 :func:`delete_path` go through the Hadoop ``FileSystem`` of the path,
 so they hold for ``hdfs://``, ``s3a://`` and ``file://`` targets as
@@ -35,6 +44,10 @@ This module bounds that:
                         the replay-exclusion contract survives the
                         fold: batch N still excludes its own rows by
                         column filter, whichever segment they sit in.
+                        Each bucket is ONE file, its rows sorted on
+                        every column, so a fold's bytes depend only on
+                        the rows it folds, not on the plan or the file
+                        order that delivered them.
 - ``_compacted/_folded``      single-row commit record: the highest
                         ``batch_id`` folded into the segment.  Written
                         LAST inside the staged segment, so its
@@ -75,8 +88,9 @@ at table granularity.
 
 from __future__ import annotations
 
+import threading
 import uuid
-from typing import Callable
+from typing import Any, Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -84,6 +98,7 @@ from pyspark.sql import functions as F
 COMPACTED = "_compacted"
 COMPACTED_NEXT = "_compacted_next"
 FOLDED_MARKER = "_folded"
+MARKER_SCHEMA = "batch_id bigint"
 
 # Production lifecycle defaults (the composed tick arms compaction and
 # retention by default).  64 live partitions:
@@ -124,6 +139,38 @@ def drain(
         .start()
         .awaitTermination()
     )
+
+
+def _concurrently(spark: SparkSession, *legs: Callable[[], Any]) -> list:
+    """Run each leg on its own thread and return their results in leg
+    order.  Every thread carries its own copy of the caller's Spark
+    local properties (job group, stream ids), taken here, before any
+    leg starts.  Waits for every leg; the first failure is re-raised
+    once all have ended."""
+    from pyspark.util import inheritable_thread_target
+
+    results: list = [None] * len(legs)
+    errors: list[BaseException] = []
+
+    def run(i: int, leg: Callable[[], Any]) -> None:
+        try:
+            results[i] = leg()
+        except BaseException as e:  # re-raised on the caller's thread
+            errors.append(e)
+
+    threads = [
+        threading.Thread(
+            target=inheritable_thread_target(spark)(run), args=(i, leg)
+        )
+        for i, leg in enumerate(legs)
+    ]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    if errors:
+        raise errors[0]
+    return results
 
 
 def _fs(spark: SparkSession, path: str):
@@ -174,7 +221,8 @@ def _folded_through(spark: SparkSession, seg_dir: str) -> int | None:
     marker = f"{seg_dir}/{FOLDED_MARKER}"
     if not path_exists(spark, marker):
         return None
-    row = spark.read.parquet(marker).first()
+    # the writer's schema: no schema-inference job for a one-row marker
+    row = spark.read.schema(MARKER_SCHEMA).parquet(marker).first()
     return int(row["batch_id"]) if row is not None else None
 
 
@@ -273,12 +321,13 @@ def maybe_compact_store(
     fold ran.  Call it after the tick's own writes — folding the
     current batch is safe because exclusion is by column.
 
-    Cost when the trigger does not fire: one filesystem listing.  When
-    it fires: one read + bucketed rewrite of old-compacted + live —
-    **O(total archive) per fold**, because the whole compacted segment
-    is rewritten alongside the live rows: the amortized per-tick cost
-    is ``archive_rows / max_live_partitions``, which grows linearly
-    with store lifetime, not a constant.  The
+    Cost when the trigger does not fire: one filesystem listing, plus
+    a one-job marker read on a folded store.  When it fires: one read +
+    bucketed rewrite of old-compacted + live, one sorted file per
+    bucket — **O(total archive) per fold**, because the whole compacted
+    segment is rewritten alongside the live rows: the amortized
+    per-tick cost is ``archive_rows / max_live_partitions``, which
+    grows linearly with store lifetime, not a constant.  The
     directory-count bound (``max_live_partitions + n_buckets`` forever)
     and the probe-side listing win are unaffected.  Deployments whose
     fold cost becomes the binding term should raise
@@ -312,10 +361,17 @@ def maybe_compact_store(
         live = live.filter(F.col("batch_id") > F.lit(folded_prev))
     n_live = live.count()
     merged = live if old is None else live.unionByName(old)
-    staged = merged.withColumn(
-        "part_key",
-        F.pmod(F.xxhash64(F.col(key_col).cast("string")), F.lit(n_buckets))
-        .cast("int"),
+    staged = (
+        merged.withColumn(
+            "part_key",
+            F.pmod(
+                F.xxhash64(F.col(key_col).cast("string")), F.lit(n_buckets)
+            ).cast("int"),
+        )
+        # one writer task per bucket, rows in a total order: one file
+        # per bucket whose bytes depend only on the folded rows
+        .repartition(n_buckets, "part_key")
+        .sortWithinPartitions("part_key", *merged.columns)
     )
     delete_path(spark, nxt_dir)
     staged.write.partitionBy("part_key").mode("overwrite").parquet(nxt_dir)
@@ -329,7 +385,7 @@ def maybe_compact_store(
             f"{n_old} compacted + {n_live} live; publish vetoed"
         )
     spark.createDataFrame(
-        [(int(max(live_ids)),)], "batch_id bigint"
+        [(int(max(live_ids)),)], MARKER_SCHEMA
     ).write.mode("overwrite").parquet(f"{nxt_dir}/{FOLDED_MARKER}")
     _commit_segment(spark, store_dir)
     return True

@@ -36,6 +36,40 @@ are FIRST-MATCH in stage order
 semantic_duplicate), mirroring the batch funnel
 (``training_corpus_pipeline``) and ``run_streaming_curation``.
 
+Concurrent store I/O: the runner's store probes, sink writes and
+maintenance steps do not depend on one another except along a few
+chains, so each chain runs as one leg of ``stores._concurrently`` and
+the legs overlap (the driver round trips of one leg hide behind the
+jobs of another).  Before the funnel, five legs:
+
+- ``resolve_srp_width`` → ``read_store(_kept_embeddings)``: the width
+  resolve can finish an interrupted re-bucket of that very store, so
+  the probe must see the store it leaves;
+- the embedding-batch lookup and its checkpoint;
+- ``read_store`` of the fingerprint, signature and window stores, one
+  leg each.
+
+After ``routed``, six legs:
+
+- keep write → ``retain_partitions(keep)`` and reject write →
+  ``retain_partitions(reject)``: retention counts the partition just
+  written;
+- fingerprint, signature and window write → that store's fold check:
+  the fold must see this batch's partition, or the next tick folds it;
+- embedding write → ``maybe_rebucket_srp_store`` → PQ dimension probe
+  → PQ encode → ``pq_drift_step`` → fold checks of the embedding and
+  PQ stores: the re-bucket counts the store including this batch, the
+  drift step may rebuild the PQ index from the embedding store and
+  rewrite the code store, and a fold of either store must not run
+  under that rebuild.
+
+Every sink frame reads only materialized boundaries (the checkpointed
+batch and embedding batch, ``routed``, and the signatures' checkpoint
+that the funnel materialized), never a store scan, so a fold on one
+leg never removes a file that another leg is reading.  A failed leg
+fails the micro-batch once every leg has ended, and the drain replays
+it.
+
 Scale shape: every stage is batch-proportional against its store —
 fingerprint probe (one hash join on md5), asymmetric band join
 (signatures), SRP-bucketed cross join (kept embeddings), md5 window
@@ -270,32 +304,58 @@ def run_streaming_tick(
         "keep": os.path.join(out_dir, "keep"),
         "reject": os.path.join(out_dir, "reject"),
     }
+    # the key each store's fold buckets on
+    fold_keys = {
+        "fp": "fp", "sig": "doc_id", "win": "win", "emb": "vec_id",
+        "pq": "vec_id",
+    }
 
     def tick(batch: DataFrame, batch_id: int) -> None:
+        from experts_etl_spark.llm.similarity import srp_bucket
+        from experts_etl_spark.llm.text import fingerprint
+
         spark_b = batch.sparkSession
         # ONE pass over the batch text: checkpoint the source batch;
         # every stage below reads this, never the stream source.
         batch = batch.localCheckpoint(eager=True)
-        # resolve the kept-embedding store's current SRP width (and
-        # complete any crash-interrupted re-bucket) BEFORE any probe —
-        # UNCONDITIONALLY, not only when this run intends to trigger
-        # re-widens: a store previously re-widened (or a sem_bits
-        # change between runs) probed at the caller's default would
-        # join batch buckets at one width against stored buckets at
-        # another and silently leak semantic duplicates.
-        bits_cur, emb_meta_row = semantic.resolve_srp_width(
-            spark_b, dirs["emb"], sem_bits
-        )
-        emb_batch = None
-        if emb_src is not None:
+        # every probe excludes this batch's own partition (replays)
+        own = dict(exclude_batch_id=batch_id, drop_batch_id=True)
+
+        def probe(name: str):
+            return lambda: stores.read_store(spark_b, dirs[name], **own)
+
+        def emb_probe():
+            # resolve the kept-embedding store's current SRP width (and
+            # complete any crash-interrupted re-bucket) BEFORE its probe
+            # — UNCONDITIONALLY, not only when this run intends to
+            # trigger re-widens: a store previously re-widened (or a
+            # sem_bits change between runs) probed at the caller's
+            # default would join batch buckets at one width against
+            # stored buckets at another and silently leak semantic
+            # duplicates.
+            width = semantic.resolve_srp_width(spark_b, dirs["emb"], sem_bits)
+            return width, stores.read_store(spark_b, dirs["emb"], **own)
+
+        def emb_lookup():
+            if emb_src is None:
+                return None
             ids = batch.select(F.col("doc_id").alias("vec_id"))
-            emb_batch = (
+            return (
                 spark_b.read.parquet(emb_src)
                 .join(F.broadcast(ids), "vec_id")
                 .localCheckpoint(eager=True)
             )
-        # every probe excludes this batch's own partition (replays)
-        own = dict(exclude_batch_id=batch_id, drop_batch_id=True)
+
+        (
+            ((bits_cur, emb_meta_row), kept_embeddings),
+            emb_batch,
+            kept_fps,
+            index_signatures,
+            window_store,
+        ) = stores._concurrently(
+            spark_b, emb_probe, emb_lookup, probe("fp"), probe("sig"),
+            probe("win"),
+        )
         routed, sigs = curation_tick(
             batch,
             emb_batch,
@@ -303,10 +363,10 @@ def run_streaming_tick(
             near_dup_threshold=near_dup_threshold,
             sem_threshold=sem_threshold,
             sem_bits=bits_cur,
-            kept_fps=stores.read_store(spark_b, dirs["fp"], **own),
-            index_signatures=stores.read_store(spark_b, dirs["sig"], **own),
-            window_store=stores.read_store(spark_b, dirs["win"], **own),
-            kept_embeddings=stores.read_store(spark_b, dirs["emb"], **own),
+            kept_fps=kept_fps,
+            index_signatures=index_signatures,
+            window_store=window_store,
+            kept_embeddings=kept_embeddings,
             window_words=window_words,
             max_sf=max_sf,
             lsh_max_df=lsh_max_df,
@@ -315,120 +375,129 @@ def run_streaming_tick(
         keep_ids = routed.filter(F.col("reject_reason").isNull()).select(
             "doc_id"
         )
-
-        from experts_etl_spark.llm.text import fingerprint
-
         kept_docs = batch.join(keep_ids, "doc_id")
-        (
-            kept_docs.select(
-                "doc_id",
-                "lang",
-                "source",
-                fingerprint(F.col("text")).alias("fp"),
-            )
-            .join(routed.select("doc_id", "quality", "clean_text"), "doc_id")
-            .write.mode("overwrite")
-            .parquet(os.path.join(dirs["keep"], f"batch_id={batch_id}"))
-        )
-        (
-            routed.filter(F.col("reject_reason").isNotNull())
-            .select("doc_id", "quality", "reject_reason")
-            .write.mode("overwrite")
-            .parquet(os.path.join(dirs["reject"], f"batch_id={batch_id}"))
-        )
-        (
-            kept_docs.select(fingerprint(F.col("text")).alias("fp"))
-            .distinct()
-            .write.mode("overwrite")
-            .parquet(os.path.join(dirs["fp"], f"batch_id={batch_id}"))
-        )
-        (
-            sigs.join(keep_ids, "doc_id")
-            .write.mode("overwrite")
-            .parquet(os.path.join(dirs["sig"], f"batch_id={batch_id}"))
-        )
-        (
-            substring_window_store(kept_docs, "text", "doc_id", window_words)
-            .write.mode("overwrite")
-            .parquet(os.path.join(dirs["win"], f"batch_id={batch_id}"))
-        )
-        if emb_batch is not None:
-            from experts_etl_spark.llm.similarity import srp_bucket
 
-            kept_embs = emb_batch.join(
-                keep_ids.select(F.col("doc_id").alias("vec_id")), "vec_id"
+        def write(df: DataFrame, name: str) -> None:
+            df.write.mode("overwrite").parquet(
+                os.path.join(dirs[name], f"batch_id={batch_id}")
             )
-            # persist the SRP bucket at the store's pinned width so the
-            # next tick's probe joins the stored index instead of
-            # re-deriving quantize+bucket over the whole archive
-            # (bucketed_cross_hits' precomputed-bucket arm)
-            (
-                kept_embs.select(
-                    "vec_id",
-                    "embedding",
-                    srp_bucket(F.col("embedding"), bits_cur).alias("bucket"),
+
+        def retain(name: str) -> None:
+            if retain_decisions is not None:
+                stores.retain_partitions(spark_b, dirs[name], retain_decisions)
+
+        def fold(name: str) -> None:
+            if compact_after is not None:
+                stores.maybe_compact_store(
+                    spark_b, dirs[name], fold_keys[name],
+                    max_live_partitions=compact_after,
                 )
-                .write.mode("overwrite")
-                .parquet(os.path.join(dirs["emb"], f"batch_id={batch_id}"))
-            )
-            if sem_occupancy_limit is not None:
-                semantic.maybe_rebucket_srp_store(
-                    spark_b, dirs["emb"], bits_cur,
-                    sem_occupancy_limit, emb_meta_row,
+
+        def chain(name: str, rows: DataFrame, then):
+            def run() -> None:
+                write(rows, name)
+                then(name)
+
+            return run
+
+        def emb_chain() -> None:
+            if emb_batch is not None:
+                kept_embs = emb_batch.join(
+                    keep_ids.select(F.col("doc_id").alias("vec_id")), "vec_id"
                 )
+                # persist the SRP bucket at the store's pinned width so
+                # the next tick's probe joins the stored index instead
+                # of re-deriving quantize+bucket over the whole archive
+                # (bucketed_cross_hits' precomputed-bucket arm)
+                write(
+                    kept_embs.select(
+                        "vec_id",
+                        "embedding",
+                        srp_bucket(F.col("embedding"), bits_cur).alias(
+                            "bucket"
+                        ),
+                    ),
+                    "emb",
+                )
+                if sem_occupancy_limit is not None:
+                    semantic.maybe_rebucket_srp_store(
+                        spark_b, dirs["emb"], bits_cur,
+                        sem_occupancy_limit, emb_meta_row,
+                    )
+                if books_path is not None:
+                    pq_leg(kept_embs)
+            fold("emb")
+            # the PQ code store grows one batch_id dir per tick like
+            # the probe stores; the rebuild composes via drop_segments
+            # (ann_index.py)
+            fold("pq")
+
+        def pq_leg(kept_embs: DataFrame) -> None:
             # ONE head read over the keepers' embeddings: its dimension
             # resolves m for the encode and the drift measurement, and
             # no row means an all-rejected batch — a REAL state (a
             # fully-duplicate crawl slice) with nothing to encode or
             # drift-check, so the PQ leg is skipped (both attempts of a
             # replay skip identically, so idempotency holds)
-            probe = (
-                kept_embs.select(F.size("embedding").alias("d")).first()
-                if books_path is not None
-                else None
+            head = kept_embs.select(F.size("embedding").alias("d")).first()
+            if head is None:
+                return
+            m = pq_m if pq_m is not None else auto_pq_m(int(head["d"]))
+            books = spark_b.read.parquet(books_path)
+            write(
+                pq_encode_incremental(kept_embs, books, "vec_id", "embedding", m),
+                "pq",
             )
-            if probe is not None:
-                m = pq_m if pq_m is not None else auto_pq_m(int(probe["d"]))
-                books = spark_b.read.parquet(books_path)
-                (
-                    pq_encode_incremental(
-                        kept_embs, books, "vec_id", "embedding", m
-                    )
-                    .write.mode("overwrite")
-                    .parquet(os.path.join(dirs["pq"], f"batch_id={batch_id}"))
+            if pq_recon_ppm_threshold is not None:
+                ann_index.pq_drift_step(
+                    spark_b,
+                    kept_embs,
+                    books,
+                    batch_id=batch_id,
+                    threshold=pq_recon_ppm_threshold,
+                    m=m,
+                    arch_dir=dirs["emb"],
+                    codes_dir=dirs["pq"],
+                    books_dir=books_path,
+                    audit_dir=os.path.join(out_dir, "_pq_rebuilds"),
+                    intr_dir=os.path.join(out_dir, "_pq_intrinsic"),
                 )
-                if pq_recon_ppm_threshold is not None:
-                    ann_index.pq_drift_step(
-                        spark_b,
-                        kept_embs,
-                        books,
-                        batch_id=batch_id,
-                        threshold=pq_recon_ppm_threshold,
-                        m=m,
-                        arch_dir=dirs["emb"],
-                        codes_dir=dirs["pq"],
-                        books_dir=books_path,
-                        audit_dir=os.path.join(out_dir, "_pq_rebuilds"),
-                        intr_dir=os.path.join(out_dir, "_pq_intrinsic"),
-                    )
-        # --- store lifecycle ----------------------------------------
-        if compact_after is not None:
-            for path, key in (
-                (dirs["fp"], "fp"),
-                (dirs["sig"], "doc_id"),
-                (dirs["win"], "win"),
-                (dirs["emb"], "vec_id"),
-                # the PQ code store grows one batch_id dir per tick
-                # like the probe stores; the rebuild composes via
-                # drop_segments (ann_index.py)
-                (dirs["pq"], "vec_id"),
-            ):
-                stores.maybe_compact_store(
-                    spark_b, path, key, max_live_partitions=compact_after
-                )
-        if retain_decisions is not None:
-            for sink in (dirs["keep"], dirs["reject"]):
-                stores.retain_partitions(spark_b, sink, retain_decisions)
+
+        stores._concurrently(
+            spark_b,
+            chain(
+                "keep",
+                kept_docs.select(
+                    "doc_id",
+                    "lang",
+                    "source",
+                    fingerprint(F.col("text")).alias("fp"),
+                ).join(
+                    routed.select("doc_id", "quality", "clean_text"), "doc_id"
+                ),
+                retain,
+            ),
+            chain(
+                "reject",
+                routed.filter(F.col("reject_reason").isNotNull()).select(
+                    "doc_id", "quality", "reject_reason"
+                ),
+                retain,
+            ),
+            chain(
+                "fp",
+                kept_docs.select(fingerprint(F.col("text")).alias("fp"))
+                .distinct(),
+                fold,
+            ),
+            chain("sig", sigs.join(keep_ids, "doc_id"), fold),
+            chain(
+                "win",
+                substring_window_store(kept_docs, "text", "doc_id", window_words),
+                fold,
+            ),
+            emb_chain,
+        )
 
     stores.drain(
         stores.file_stream(spark, docs_src, max_files_per_trigger),

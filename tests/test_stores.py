@@ -13,11 +13,13 @@ from __future__ import annotations
 
 import glob
 import shutil
+import time
 
 import pytest
 from pyspark.sql import functions as F
 
 from experts_etl_spark.streaming.stores import (
+    _concurrently,
     live_batch_ids,
     maybe_compact_store,
     read_store,
@@ -109,6 +111,116 @@ def test_compaction_commit_is_crash_resumable(spark, tmp_path):
     assert glob.glob(store + "/_compacted/part_key=*")
     assert not glob.glob(store + "/_compacted_next")
     assert _rows(read_store(spark, store)) == after_crash
+
+
+def test_concurrent_legs_carry_own_job_properties_and_reraise(spark):
+    """Each leg starts with a copy of the caller's Spark local
+    properties (the stream's job group reaches every leg's jobs), a
+    property one leg sets stays its own, results come back in leg
+    order, and a failure is re-raised only after every leg ended."""
+    sc = spark.sparkContext
+    sc.setLocalProperty("test.leg.owner", "caller")
+    try:
+        def leg(i):
+            def run():
+                inherited = sc.getLocalProperty("test.leg.owner")
+                sc.setLocalProperty("test.leg.owner", f"leg{i}")
+                time.sleep(0.05)
+                return inherited, sc.getLocalProperty("test.leg.owner")
+            return run
+
+        got = _concurrently(spark, *[leg(i) for i in range(8)])
+        assert got == [("caller", f"leg{i}") for i in range(8)]
+        assert sc.getLocalProperty("test.leg.owner") == "caller"
+
+        ended = []
+
+        def slow():
+            time.sleep(0.3)
+            ended.append(True)
+
+        def boom():
+            raise ValueError("leg failed")
+
+        with pytest.raises(ValueError, match="leg failed"):
+            _concurrently(spark, boom, slow)
+        assert ended == [True]
+    finally:
+        sc.setLocalProperty("test.leg.owner", None)
+
+
+def _jobs_of(spark, fn):
+    sched = spark.sparkContext._jsc.sc().dagScheduler()
+    before = sched.numTotalJobs()
+    fn()
+    return sched.numTotalJobs() - before
+
+
+def test_read_store_lists_partitions_on_the_driver(spark, tmp_path):
+    """A store at the live-partition bound is listed on the driver, not
+    by a partition-listing job: reading 40 live partitions costs only
+    the one schema job."""
+    store = str(tmp_path / "store")
+    spark.range(160).selectExpr(
+        "id AS item_id", "CAST(id % 40 AS INT) AS batch_id"
+    ).write.partitionBy("batch_id").parquet(store)
+    assert len(live_batch_ids(spark, store)) == 40
+    assert _jobs_of(spark, lambda: read_store(spark, store)) == 1
+
+
+def test_marker_reads_skip_schema_inference(spark, tmp_path):
+    """The one-row ``_folded`` marker is read with the writer's schema:
+    a folded store plus one live partition probes in at most 3 jobs
+    (marker row, segment schema, live schema), and a fold check that
+    does not fire costs one."""
+    store = str(tmp_path / "store")
+    _write_batches(spark, store, 3)
+    assert maybe_compact_store(spark, store, "item_id",
+                               max_live_partitions=2)
+    _write_batches(spark, store + "_tail", 1)
+    shutil.move(store + "_tail/batch_id=0", store + "/batch_id=7")
+    assert _jobs_of(spark, lambda: read_store(spark, store)) <= 3
+    assert _jobs_of(spark, lambda: maybe_compact_store(
+        spark, store, "item_id", max_live_partitions=2)) <= 1
+
+
+def test_fold_writes_one_file_per_bucket_independent_of_landing_order(
+    spark, tmp_path
+):
+    """The same rows, landed in opposite batch orders with different
+    row orders and file splits, and folded in one or two waves, give
+    one file per bucket with the same bytes."""
+    batches = {
+        b: [(b * 100 + i, f"k{b}_{i}") for i in range(6)] for b in range(8)
+    }
+
+    def land(store, order, reverse_rows, n_files):
+        for b in order:
+            rows = batches[b][::-1] if reverse_rows else batches[b]
+            spark.createDataFrame(
+                rows, "item_id long, payload string"
+            ).repartition(n_files).write.mode("overwrite").parquet(
+                f"{store}/batch_id={b}"
+            )
+
+    a, b = str(tmp_path / "a"), str(tmp_path / "b")
+    land(a, range(5), False, 1)
+    assert maybe_compact_store(spark, a, "item_id", max_live_partitions=1)
+    land(a, range(5, 8), False, 1)
+    assert maybe_compact_store(spark, a, "item_id", max_live_partitions=1)
+    land(b, reversed(range(8)), True, 3)
+    assert maybe_compact_store(spark, b, "item_id", max_live_partitions=1)
+
+    def files(store):
+        out = {}
+        for d in glob.glob(store + "/_compacted/part_key=*"):
+            (f,) = glob.glob(d + "/*.parquet")  # one file per bucket
+            out[d.rsplit("/", 1)[1]] = open(f, "rb").read()
+        return out
+
+    fa, fb = files(a), files(b)
+    assert fa and fa.keys() == fb.keys()
+    assert all(fa[k] == fb[k] for k in fa)
 
 
 def test_retain_partitions_archives_old_batches(spark, tmp_path):

@@ -3,7 +3,11 @@ owns the streaming I/O path.  No other module builds a Hadoop ``Path``,
 calls ``getFileSystem``, probes with ``os.path.exists``/``os.listdir``
 (always False/absent on ``hdfs://``, ``s3a://`` and ``file://``
 targets), or starts its own ``foreachBatch`` query; in ``stores.py``
-itself ``foreachBatch`` appears only inside :func:`drain`."""
+itself ``foreachBatch`` appears only inside :func:`drain`.  No other
+module starts a thread either (``threading.Thread``,
+``ThreadPoolExecutor``, ``InheritableThread``): concurrent legs go
+through ``stores._concurrently``, which hands every thread the
+micro-batch's Spark job properties."""
 
 from __future__ import annotations
 
@@ -16,6 +20,7 @@ import experts_etl_spark.streaming as streaming_pkg
 PKG_DIR = os.path.dirname(streaming_pkg.__file__)
 FORBIDDEN_CALLS = {"os.path.exists", "os.listdir", "org.apache.hadoop.fs.Path"}
 FORBIDDEN_ATTRS = {"getFileSystem", "foreachBatch"}
+THREAD_NAMES = {"Thread", "ThreadPoolExecutor", "InheritableThread"}
 
 
 def _violations(path: str) -> list[str]:
@@ -47,3 +52,29 @@ def test_streaming_io_goes_through_stores():
     assert os.path.join(PKG_DIR, "stores.py") in modules
     bad = [v for m in modules for v in _violations(m)]
     assert not bad, "streaming I/O outside stores.py:\n" + "\n".join(bad)
+
+
+def _thread_uses(path: str) -> list[str]:
+    """Every mention of a thread class: a name, an attribute or an
+    imported name."""
+    out = []
+    for node in ast.walk(ast.parse(open(path).read(), path)):
+        if isinstance(node, ast.Name):
+            name = node.id
+        elif isinstance(node, ast.Attribute):
+            name = node.attr
+        elif isinstance(node, ast.alias):
+            name = node.name.rsplit(".", 1)[-1]
+        else:
+            continue
+        if name in THREAD_NAMES:
+            out.append(f"{path}:{getattr(node, 'lineno', '?')} {name}")
+    return out
+
+
+def test_streaming_threads_start_only_in_stores():
+    modules = sorted(glob.glob(os.path.join(PKG_DIR, "*.py")))
+    stores_py = os.path.join(PKG_DIR, "stores.py")
+    assert _thread_uses(stores_py), "stores.py no longer starts the legs"
+    bad = [v for m in modules if m != stores_py for v in _thread_uses(m)]
+    assert not bad, "threads started outside stores.py:\n" + "\n".join(bad)

@@ -237,6 +237,56 @@ def test_tick_replay_is_idempotent(spark, tick_env, tmp_path):
     assert snapshot() == before
 
 
+def _snapshot(spark, out):
+    """Every sink's and store's rows (``test_tick_replay_is_idempotent``'s
+    snapshot)."""
+    snap = {}
+    for sink in ("keep", "reject", "_fingerprints", "_signatures",
+                 "_window_counts", "_kept_embeddings", "_pq_index"):
+        df = spark.read.parquet(f"{out}/{sink}")
+        snap[sink] = sorted(map(tuple, df.collect()))
+    return snap
+
+
+def test_tick_failed_leg_fails_batch_and_replay_converges(
+    spark, tick_env, tmp_path, monkeypatch
+):
+    """A leg that fails mid-tick (here the first retention call) fails
+    the micro-batch after the other legs end; the next drain replays
+    the batch, and every sink and store then equals a clean run's."""
+    from experts_etl_spark.streaming import stores
+
+    env = tick_env
+    clean = dict(
+        env, src=tmp_path / "src_clean", out=str(tmp_path / "out_clean"),
+        ckpt=str(tmp_path / "ckpt_clean"),
+    )
+    clean["src"].mkdir()
+    for name in ("b1", "b2"):
+        _land(tmp_path, clean["src"], env[name], f"clean_{name}")
+        _run(spark, clean)
+
+    _land(tmp_path, env["src"], env["b1"], "b1")
+    _run(spark, env)
+    _land(tmp_path, env["src"], env["b2"], "b2")
+    real = stores.retain_partitions
+    calls = []
+
+    def fails_once(*a, **k):
+        calls.append(a)
+        if len(calls) == 1:
+            raise RuntimeError("injected retention failure")
+        return real(*a, **k)
+
+    monkeypatch.setattr(stores, "retain_partitions", fails_once)
+    with pytest.raises(Exception, match="injected retention failure"):
+        _run(spark, env)
+    monkeypatch.undo()
+    _run(spark, env)  # replays batch 1
+    assert _reasons(spark, env, 1) == _reasons(spark, clean, 1)
+    assert _snapshot(spark, env["out"]) == _snapshot(spark, clean["out"])
+
+
 def test_pq_rebuild_fires_once_and_is_replay_stable(spark, tmp_path):
     from experts_etl_spark.streaming.ann_index import (
         run_streaming_pq_ingest_with_rebuild,
