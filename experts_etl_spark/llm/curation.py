@@ -521,9 +521,9 @@ def substring_dedup_incremental(
     batch_counts = wins.groupBy("win").agg(
         F.count(F.lit(1)).alias("_bsf")
     )
-    # The store may hold SEVERAL rows per win — the streaming runner
-    # appends one partition of counts per ingested batch and compacts
-    # only periodically (merge_window_store) — so sum the matched
+    # The store may hold SEVERAL rows per win — the streaming tick
+    # appends one partition of counts per ingested batch, and its store
+    # fold keeps those rows as they are — so sum the matched
     # rows AFTER the probe join: the aggregation is over batch wins ×
     # matched partitions, batch-proportional, instead of a per-tick
     # store-wide pre-aggregation shuffle.

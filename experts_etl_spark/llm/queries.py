@@ -805,9 +805,10 @@ def embedding_semantic_dedup_incremental(
     index parameter — auto_srp_bits of the FULL corpus count, exactly
     what the oracle's _SRP macro derives — because re-deriving width
     per batch would re-block history differently every tick.  The
-    streaming twin (``streaming/semantic.py``) runs the same operator
-    per micro-batch with replay-idempotent partitioned sinks
-    (tests/test_streaming_semantic.py)."""
+    streaming tick (``streaming/tick.py``) runs the same operator per
+    micro-batch against its kept-embedding store
+    (tests/test_streaming_semantic.py pins the id-ordered batch loop
+    against the full sequential greedy)."""
     from experts_etl_spark.llm.similarity import (
         auto_srp_bits,
         semantic_dedup_incremental,
@@ -3329,12 +3330,13 @@ def dedup_exact_substrings_incremental(
 )
 def curation_stream_routing(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch twin of the streaming curation micro-batch: the SAME
-    ``route_documents`` function ``run_streaming_curation`` applies
-    per micro-batch (streaming/curation.py), run over the documents
-    table as one batch with no prior corpus — so this driver row
-    hash-proves the streaming path's routing semantics (quality gate →
-    Gopher repetition filter → gate-aware in-batch dedup → first-match
-    reject reason) against an independent SQL oracle."""
+    ``route_documents`` function the streaming tick applies per
+    micro-batch (stage 1 of ``streaming/tick.py:curation_tick``), run
+    over the documents table as one batch with no prior corpus — so
+    this driver row hash-proves the streaming path's routing semantics
+    (quality gate → Gopher repetition filter → gate-aware in-batch
+    dedup → first-match reject reason) against an independent SQL
+    oracle."""
     from experts_etl_spark.streaming.curation import route_documents
 
     d = read_table(spark, sf_dir, "documents")
@@ -4358,10 +4360,11 @@ def curation_tick_selfmaint(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the archive history is the gated incremental
     operator's contract (store priming); the probe is batch×store
     bucket-joined; training is bounded m·k dots per vector with the
-    k=256 cap; nothing all-pairs.  The streaming twins
-    (``maybe_rebucket_srp_store`` / ``maybe_rebuild_pq_index``) run
-    the same rules against persisted stores with crash-safe publishes
-    (tests/test_streaming_semantic.py, tests/test_streaming_tick.py).
+    k=256 cap; nothing all-pairs.  The streaming tick's maintenance
+    steps (``maybe_rebucket_srp_store`` / ``pq_drift_step`` →
+    ``maybe_rebuild_pq_index``) run the same rules against persisted
+    stores with crash-safe publishes (tests/test_streaming_semantic.py,
+    tests/test_streaming_tick.py).
     """
     from experts_etl_spark.llm.pq import (
         pq_encode_incremental,

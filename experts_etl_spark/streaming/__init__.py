@@ -30,6 +30,3 @@ from experts_etl_spark.streaming.incremental import (  # noqa: F401
     run_streaming_dedup,
     session_window_sessions_frame,
 )
-from experts_etl_spark.streaming.curation import (  # noqa: F401
-    run_streaming_curation,
-)

@@ -1,20 +1,20 @@
-"""Streaming ANN-index maintenance: encode arriving embedding batches
-against persisted PQ codebooks and append the skinny code rows.
+"""Streaming ANN-index maintenance: the PQ leg of ``streaming/tick.py``
+and the probe-side IVFADC search runner.
 
-The Structured Streaming twin of ``llm/pq.py:pq_encode_incremental``
-(exactly like ``streaming/curation.py`` twins the batch curation
-funnel): a deployment trains codebooks once (``pq_train`` /
-``ivfpq_index``), persists them, and every arriving embedding batch
-maps through the BROADCAST books — m·k subspace dots per new vector,
-no retrain, no touch of the standing index.  Codebook drift under a
-shifting ingest distribution is a rebuild trigger (retrain + re-encode
-behind a new index path), never an encode-time concern — the FAISS
-operational model.
+A deployment trains codebooks once (``pq_train`` / ``ivfpq_index``)
+and persists them; every tick encodes its keepers' embeddings through
+the BROADCAST books (``llm/pq.py:pq_encode_incremental`` — m·k
+subspace dots per new vector, no retrain, no touch of the standing
+index) and appends the skinny code rows.  Codebook drift under a
+shifting ingest distribution is a rebuild, never an encode-time
+concern — the FAISS operational model: :func:`pq_drift_step` measures
+the batch's reconstruction drift and :func:`maybe_rebuild_pq_index`
+retrains and re-encodes behind a write-audit-publish swap.
 
-Idempotency: the sink is hive-partitioned on ``batch_id`` with dynamic
-partition overwrite, so an at-least-once ``foreachBatch`` replay
-rewrites its own partition instead of appending duplicates (the same
-guarantee ``streaming/incremental.py`` pins for the merge sink).
+Idempotency: every sink overwrites its own ``batch_id`` partition, so
+an at-least-once ``foreachBatch`` replay rewrites its own partition
+instead of appending duplicates (the same guarantee
+``streaming/incremental.py`` pins for the merge sink).
 """
 
 from __future__ import annotations
@@ -90,8 +90,7 @@ def resolve_recon_threshold(
        CALIBRATE (record this tick's ppm as the marker and skip the
        drift decision) rather than arm a floor that may sit below the
        corpus's intrinsic error, which would fire a futile same-data
-       rebuild whose audit veto wedges the stream on every replay (the
-       same wedge the ingest runner's bootstrap exemption avoids).
+       rebuild whose audit veto wedges the stream on every replay.
 
     The 4× margin keeps the trigger strictly above the books' own
     error with 2 bits of headroom, yet far under the ~1e6 ppm a real
@@ -119,43 +118,6 @@ def resolve_recon_threshold(
     if intrinsic_dir is not None:
         return None  # caller calibrates this tick
     return DEFAULT_PQ_RECON_PPM
-
-
-def run_streaming_pq_encode(
-    spark: SparkSession,
-    src: str,
-    books_path: str,
-    index_dir: str,
-    checkpoint_dir: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    m: int = 4,
-    max_files_per_trigger: int | None = None,
-) -> None:
-    """Drain ``src`` (``availableNow``) of embedding parquet batches,
-    encoding each against the persisted codebooks at ``books_path`` and
-    appending (vec_id, sub_id, code_id, n2, batch_id) partitions to
-    ``index_dir``.
-
-    Per-tick cost is batch-proportional: the books are a fixed m·k-row
-    broadcast, the batch never joins the standing index, and the write
-    touches only the batch's own partition."""
-    books = spark.read.parquet(books_path)
-
-    def encode(batch: DataFrame, batch_id: int) -> None:
-        out = pq_encode_incremental(batch, books, id_col, vec_col, m)
-        (
-            out.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(index_dir)
-        )
-
-    S.drain(
-        S.file_stream(spark, src, max_files_per_trigger), encode,
-        checkpoint_dir,
-    )
 
 
 def run_streaming_ivfpq_search(
@@ -190,8 +152,7 @@ def run_streaming_ivfpq_search(
     next (re)index.  Idempotency: the sink is hive-partitioned on
     ``batch_id`` with dynamic partition overwrite, so an at-least-once
     ``foreachBatch`` replay rewrites its own partition instead of
-    appending duplicates — the same guarantee as
-    :func:`run_streaming_pq_encode`.
+    appending duplicates — the same guarantee as the tick's sinks.
 
     Read knobs default to the batch twin's self-scaling rules
     (``auto_nprobe`` / ``auto_refine_mult``), resolved ONCE against
@@ -205,12 +166,7 @@ def run_streaming_ivfpq_search(
 
     cells = spark.read.parquet(cells_path)
     books = spark.read.parquet(books_path)
-    # segment-aware index read: a code table maintained by the
-    # compacting ingest runner holds folded rows under _compacted
-    # (invisible to a plain read — underscore dirs are hidden); flat
-    # batch-built tables fall back to the plain read
-    idx_df = S.read_store(spark, index_path, drop_batch_id=True)
-    index = idx_df if idx_df is not None else spark.read.parquet(index_path)
+    index = spark.read.parquet(index_path)
     emb = spark.read.parquet(emb_path)
     if nprobe is None:
         nprobe = auto_nprobe(cells.count())
@@ -246,17 +202,13 @@ def maybe_rebuild_pq_index(
     batch_id: int,
     pre_ppm: int,
     recon_ppm_threshold: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     m: int | None = None,
-    code_mod: int | None = None,
-    iters: int = 2,
     intrinsic_dir: str | None = None,
 ) -> bool:
     """One transactional PQ index rebuild (the drift branch of
-    :func:`run_streaming_pq_ingest_with_rebuild`, shared with the
-    composed curation tick): retrain codebooks on the raw archive's
-    ``train_mod="auto"`` sample (~16·k vectors — the measured
+    :func:`pq_drift_step`, which the tick's PQ leg runs): retrain
+    codebooks on the kept-embedding archive's ``train_mod="auto"``
+    sample (~16·k vectors — the measured
     TRAIN_AUTO_MIN lesson; the k=256 cap bounds the sample at ~4096,
     so training is O(1) in the archive while the re-encode stays the
     unavoidable linear term), re-encode everything, and publish the
@@ -267,7 +219,7 @@ def maybe_rebuild_pq_index(
     the threshold retries once with full Lloyd before vetoing (a veto
     wedges the stream on every replay, so it must be the last resort,
     not the first response to a degenerate sample).
-    The archive is compacted latest-batch-wins on ``id_col`` first: a
+    The archive is compacted latest-batch-wins on ``vec_id`` first: a
     re-arrived id is a correction, and fanning it out to two code rows
     would double-count it in the index; partitions whose every id was
     superseded are DELETED (they would otherwise survive the dynamic
@@ -291,7 +243,7 @@ def maybe_rebuild_pq_index(
     # (streaming/stores.py) keeps batch_id as a column in its folded
     # segment, so latest-batch-wins compaction below works unchanged
     raw = S.read_store(spark, arch_dir)
-    w = Window.partitionBy(id_col).orderBy(F.col("batch_id").desc())
+    w = Window.partitionBy("vec_id").orderBy(F.col("batch_id").desc())
     corpus = (
         raw.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
@@ -302,22 +254,20 @@ def maybe_rebuild_pq_index(
     # n_ids already counted for the publish audit — share it with the
     # trainer's knob derivation instead of a second archive count
     _, books2 = pq_train(
-        corpus, id_col, vec_col, m, code_mod, iters, train_mod="auto",
-        n_rows=n_ids,
+        corpus, "vec_id", "embedding", m, train_mod="auto", n_rows=n_ids
     )
     books2 = books2.localCheckpoint(eager=True)
-    post_ppm = pq_recon_ppm(corpus, books2, id_col, vec_col, m)
+    post_ppm = pq_recon_ppm(corpus, books2, "vec_id", "embedding", m)
     if post_ppm > recon_ppm_threshold:
         # sampled books missed the bar (a pathological id space can
         # starve the stride sample even past pq_train's density
         # fallback): one full-Lloyd retry before wedging the stream on
         # a veto that every replay would just re-hit
         _, books2 = pq_train(
-            corpus, id_col, vec_col, m, code_mod, iters, train_mod="full",
-            n_rows=n_ids,
+            corpus, "vec_id", "embedding", m, train_mod="full", n_rows=n_ids
         )
         books2 = books2.localCheckpoint(eager=True)
-        post_ppm = pq_recon_ppm(corpus, books2, id_col, vec_col, m)
+        post_ppm = pq_recon_ppm(corpus, books2, "vec_id", "embedding", m)
     if post_ppm > recon_ppm_threshold:
         # pre-stage veto, STRICTLY read-only: nothing —
         # codes, segments, books — has been touched yet.  An
@@ -338,16 +288,12 @@ def maybe_rebuild_pq_index(
         )
 
     def _audit(staged: DataFrame) -> None:
-        # the code schema's id column is always the canonical "vec_id"
-        # (pq_encode_incremental aliases id_col to it)
         if staged.select("vec_id").distinct().count() != n_ids:
             raise RuntimeError("PQ rebuild audit: re-encode row loss")
 
     recoded = pq_encode_incremental(
-        corpus.drop("batch_id"), books2, id_col, vec_col, m
-    ).join(
-        corpus.select(F.col(id_col).alias("vec_id"), "batch_id"), "vec_id"
-    )
+        corpus.drop("batch_id"), books2, "vec_id", "embedding", m
+    ).join(corpus.select("vec_id", "batch_id"), "vec_id")
     # A COMPACTED codes store (streaming/stores.py:maybe_compact_store)
     # holds folded code rows under _compacted with
     # a _folded watermark that read_store uses to IGNORE live
@@ -424,14 +370,9 @@ def pq_drift_step(
     books_dir: str,
     audit_dir: str,
     intr_dir: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    code_mod: int | None = None,
-    iters: int = 2,
 ) -> None:
-    """The drift decision for a batch just encoded against ``books`` —
-    the one step behind the composed tick and
-    :func:`run_streaming_pq_ingest_with_rebuild`.
+    """The drift decision of the tick's PQ leg, for a batch just
+    encoded against ``books``.
 
     Resolves ``threshold`` (``"auto"`` → :func:`resolve_recon_threshold`
     over ``audit_dir`` and ``intr_dir``), measures the batch's
@@ -450,7 +391,7 @@ def pq_drift_step(
         if auto
         else threshold
     )
-    ppm = pq_recon_ppm(emb, books, id_col, vec_col, m)
+    ppm = pq_recon_ppm(emb, books, "vec_id", "embedding", m)
     if thr is None:
         _write_intrinsic(spark, intr_dir, batch_id, ppm)
     elif ppm > thr:
@@ -463,234 +404,6 @@ def pq_drift_step(
             batch_id=batch_id,
             pre_ppm=ppm,
             recon_ppm_threshold=thr,
-            id_col=id_col,
-            vec_col=vec_col,
             m=m,
-            code_mod=code_mod,
-            iters=iters,
             intrinsic_dir=intr_dir if auto else None,
         )
-
-
-def run_streaming_pq_ingest_with_rebuild(
-    spark: SparkSession,
-    src: str,
-    index_dir: str,
-    checkpoint_dir: str,
-    *,
-    recon_ppm_threshold: int | str = "auto",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    m: int | None = None,
-    code_mod: int | None = None,
-    iters: int = 2,
-    compact_after: int | None = S.DEFAULT_MAX_LIVE_PARTITIONS,
-    max_files_per_trigger: int | None = None,
-) -> None:
-    """Streaming PQ ingest with the REBUILD LOOP closed: every arriving
-    embedding batch encodes against the
-    standing codebooks, its reconstruction drift is measured
-    (:func:`~experts_etl_spark.llm.pq.pq_recon_ppm` — the decision
-    scalar behind the gated ``ann_pq_recon_error`` audit), and a batch
-    whose ppm crosses ``recon_ppm_threshold`` triggers exactly one
-    codebook retrain over the accumulated raw archive plus a full
-    re-encode, swapped in atomically via
-    :func:`~experts_etl_spark.sources.sinks.overwrite_partitions` with
-    an AUDIT HOOK that vetoes the publish unless the re-encoded index
-    is back under the threshold — write-audit-publish, so a failed
-    rebuild leaves the old index fully intact.  This is the FAISS
-    operational model: encode-time never retrains; drift is a rebuild,
-    and the rebuild is transactional.
-
-    ``recon_ppm_threshold`` DEFAULTS to ``"auto"`` (maintenance is the
-    production posture, not an opt-in):
-    resolved per tick via :func:`resolve_recon_threshold`, so after
-    every rebuild the trigger re-anchors at 4× the books' measured
-    intrinsic error.  Pass an int to pin it, or a very large int to
-    effectively disable the drift check.
-
-    ``compact_after`` (default
-    :data:`~experts_etl_spark.streaming.stores.DEFAULT_MAX_LIVE_PARTITIONS`)
-    bounds BOTH per-tick stores' directory growth — the raw-embedding
-    archive and the code table each gain one ``batch_id=N`` dir per
-    tick forever without it — via
-    :func:`~experts_etl_spark.streaming.stores.maybe_compact_store`
-    after each tick's writes.  The rebuild composes with a folded code
-    store by dropping its segment before republishing (every code row
-    is re-encoded, so the fold is wholly superseded —
-    :func:`~experts_etl_spark.streaming.stores.drop_segments`); the
-    archive's fold keeps ``batch_id`` as a data column, so
-    latest-batch-wins compaction inside the rebuild is unchanged.
-    Pass ``None`` to disable compaction.
-
-    Layout under ``index_dir``:
-
-    - ``_books``             standing codebooks (overwritten on rebuild)
-    - ``_embeddings/batch_id=N``  raw-embedding archive (rebuild input)
-    - ``codes/batch_id=N``   the skinny code rows (re-encoded on rebuild)
-    - ``_rebuilds/batch_id=N``    audit log: (batch_id, pre_ppm, post_ppm)
-
-    First tick bootstraps: no standing books → train on the first
-    batch and write them, then SKIP the drift check entirely — the
-    batch's ppm against books trained on itself is the intrinsic PQ
-    quantization error, not drift, so a threshold below that intrinsic
-    error must not fire a futile same-data rebuild (whose post-audit
-    would veto and wedge the stream on every replay).  Replays of the
-    bootstrap batch are likewise exempt: the
-    ``<index_dir>/_bootstrap_batch`` marker records the bootstrap
-    batch's CONTENT fingerprint (row count + XOR of (id, vector)
-    row hashes), and the
-    check only arms for a batch whose content differs — a raw
-    batch-id marker would wrongly exempt the first batch of NEW data
-    arriving under a re-pointed checkpoint, whose ids restart at 0.
-
-    Rebuild training runs on the ``train_mod="auto"`` √n-style sample
-    (:func:`~experts_etl_spark.llm.pq.auto_pq_train_mod`: ~16·k
-    vectors, bounded at ~4096 by the k=256 cap) — the measured
-    TRAIN_AUTO_MIN lesson (full Lloyd 152s vs 11.2s sampled) — while
-    the full-corpus ``pq_recon_ppm`` post-audit stays the quality
-    veto, so sampling carries zero recall risk.
-
-    Cross-batch duplicate ids: the archive is compacted latest-batch-
-    wins (per-id max batch_id) before retrain and re-encode — a
-    re-arrived id is a correction, and fanning it out to two code rows
-    would double-count it in the index.
-
-    Replay idempotency (at-least-once ``foreachBatch``): the archive
-    and code sinks overwrite their own ``batch_id`` partition; a
-    replay of a batch whose first attempt triggered a rebuild now
-    measures against the RETRAINED books, lands under the threshold,
-    and re-encodes identically — the rebuild fires once, the books are
-    a fixpoint of the replay (pinned in tests/test_streaming_tick.py).
-    """
-    books_dir = os.path.join(index_dir, "_books")
-    arch_dir = os.path.join(index_dir, "_embeddings")
-    codes_dir = os.path.join(index_dir, "codes")
-    audit_dir = os.path.join(index_dir, "_rebuilds")
-    intr_dir = os.path.join(index_dir, "_pq_intrinsic")
-    boot_marker = os.path.join(index_dir, "_bootstrap_batch")
-
-    def _fingerprint(b: DataFrame) -> tuple[int, int]:
-        """Order-free content identity of a batch (row count + XOR of
-        (id, vector) row hashes; XOR cannot overflow under ANSI
-        arithmetic) — one
-        column-pruned aggregate over the checkpointed batch.
-        Identifies the bootstrap batch by WHAT it contains, not by its
-        checkpoint-relative batch_id: foreachBatch ids restart at 0
-        with any fresh checkpoint dir, so a raw-id exemption would
-        silently skip the drift check for the first batch of genuinely
-        NEW data in a re-pointed run."""
-        row = (
-            b.select(
-                F.xxhash64(
-                    F.col(id_col).cast("string"), F.col(vec_col)
-                ).alias("_h")
-            )
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                F.expr("bit_xor(_h)").alias("h"),
-            )
-            .first()
-        )
-        return int(row["n"]), int(row["h"]) if row["h"] is not None else 0
-
-    def _xor_hash(b: DataFrame) -> int:
-        """The hash half of :func:`_fingerprint` alone — computed only
-        after the row-count half already matched (the XOR aggregate is
-        a full-batch pass, so the routine post-bootstrap tick should pay
-        just the cheap count over the checkpointed batch; the hash runs
-        only on the rare count collision)."""
-        row = (
-            b.select(
-                F.xxhash64(
-                    F.col(id_col).cast("string"), F.col(vec_col)
-                ).alias("_h")
-            )
-            .agg(F.expr("bit_xor(_h)").alias("h"))
-            .first()
-        )
-        return int(row["h"]) if row["h"] is not None else 0
-
-    def ingest(batch: DataFrame, batch_id: int) -> None:
-        spark_b = batch.sparkSession
-        batch = batch.localCheckpoint(eager=True)
-        # raw-embedding archive append (rebuild training input) — own
-        # partition, replay-overwritten
-        (
-            batch.select(id_col, vec_col)
-            .write.mode("overwrite")
-            .parquet(os.path.join(arch_dir, f"batch_id={batch_id}"))
-        )
-        bootstrap = not S.path_exists(spark_b, books_dir)
-        if bootstrap:
-            _, books = pq_train(
-                batch, id_col, vec_col, m, code_mod, iters, train_mod="auto"
-            )
-            books.write.mode("overwrite").parquet(books_dir)
-            fp_n, fp_h = _fingerprint(batch)
-            spark_b.createDataFrame(
-                [(int(batch_id), fp_n, fp_h)],
-                "batch_id bigint, n bigint, h bigint",
-            ).write.mode("overwrite").parquet(boot_marker)
-        books = spark_b.read.parquet(books_dir)
-        (
-            pq_encode_incremental(batch, books, id_col, vec_col, m)
-            .write.mode("overwrite")
-            .parquet(os.path.join(codes_dir, f"batch_id={batch_id}"))
-        )
-        if bootstrap:
-            if recon_ppm_threshold == "auto":
-                # the fresh books' error on their own training batch IS
-                # the measured intrinsic error — record it so the auto
-                # threshold anchors at 4× measurement, never at a floor
-                # that might sit below it (resolve_recon_threshold)
-                _write_intrinsic(
-                    spark_b, intr_dir, batch_id,
-                    pq_recon_ppm(batch, books, id_col, vec_col, m),
-                )
-            return  # intrinsic quantization error is not drift
-        if S.path_exists(spark_b, boot_marker):  # absent on old indexes
-            boot_row = spark_b.read.parquet(boot_marker).first()
-            if boot_row is not None:
-                d = boot_row.asDict()
-                if "n" in d and "h" in d:
-                    # count first (cheap over the eager checkpoint),
-                    # XOR hash only on a count match
-                    if int(d["n"]) == batch.count() and int(
-                        d["h"]
-                    ) == _xor_hash(batch):
-                        return  # replay of the bootstrap CONTENT
-                elif int(d["batch_id"]) == batch_id:
-                    return  # legacy id-only marker (older indexes)
-        pq_drift_step(
-            spark_b,
-            batch,
-            books,
-            batch_id=batch_id,
-            threshold=recon_ppm_threshold,
-            m=m,
-            arch_dir=arch_dir,
-            codes_dir=codes_dir,
-            books_dir=books_dir,
-            audit_dir=audit_dir,
-            intr_dir=intr_dir,
-            id_col=id_col,
-            vec_col=vec_col,
-            code_mod=code_mod,
-            iters=iters,
-        )
-
-    def ingest_and_compact(batch: DataFrame, batch_id: int) -> None:
-        ingest(batch, batch_id)
-        if compact_after is not None:
-            for path, key in ((arch_dir, id_col), (codes_dir, "vec_id")):
-                S.maybe_compact_store(
-                    batch.sparkSession, path, key,
-                    max_live_partitions=compact_after,
-                )
-
-    S.drain(
-        S.file_stream(spark, src, max_files_per_trigger),
-        ingest_and_compact,
-        checkpoint_dir,
-    )

@@ -1,22 +1,17 @@
-"""Streaming corpus curation: the training-data side of the 4-hour
-cycle.  New document files land continuously; each micro-batch is
-quality-gated, repetition-filtered, PII-redacted, and deduplicated
-against everything already kept, then routed to keep/reject sinks.
+"""The first two stages of streaming corpus curation: the routing
+decision (quality gate, Gopher repetition filter, in-batch and
+cross-batch exact dedup) and the MinHash near-duplicate stage.
 
-``foreachBatch`` reuses the BATCH curation operators verbatim
-(llm/text.py, llm/curation.py) — one code path for batch backfills and
-the streaming tail, the same design as streaming/incremental.py's CDC
-consume.
+``streaming/tick.py``'s ``curation_tick`` runs both on every arriving
+document batch, and the registered batch twins run them on a whole
+table, so the batch backfill and the streaming tail share one code
+path — the same design as streaming/incremental.py's CDC consume.
 """
 
 from __future__ import annotations
 
-import os
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from experts_etl_spark.streaming import stores as S
 
 
 def route_documents(
@@ -25,8 +20,8 @@ def route_documents(
     kept_fps: DataFrame | None = None,
 ) -> DataFrame:
     """The curation routing decision for one batch of documents — the
-    ONE code path behind both the streaming micro-batch (``curate`` in
-    :func:`run_streaming_curation`) and the registered batch twin
+    ONE code path behind both the streaming tick (stage 1 of
+    ``streaming/tick.py:curation_tick``) and the registered batch twin
     (``curation_stream_routing``), so a driver CORRECTNESS row on the
     twin proves the streaming semantics.
 
@@ -181,164 +176,3 @@ def apply_near_dup(
         .drop("_nd")
     )
     return out, sigs
-
-
-def run_streaming_curation(
-    spark: SparkSession,
-    src: str,
-    keep_dir: str,
-    reject_dir: str,
-    checkpoint_dir: str,
-    quality_min: float = 0.5,
-    max_files_per_trigger: int | None = None,
-    fp_dir: str | None = None,
-    near_dup_threshold: float | None = None,
-    sig_dir: str | None = None,
-    lsh_max_df: int | None = None,
-) -> None:
-    """Drain ``src`` (``availableNow``) routing every document to keep
-    or reject with a recorded reason.
-
-    Per micro-batch, in order:
-
-    1. quality score + Gopher repetition flag (doc-local, pure
-       map/agg — ``llm/text.py:quality_score``,
-       ``llm/curation.py:repetition_metrics``);
-    2. PII redaction of the kept text (pure map);
-    3. in-batch exact dedup: one keeper per fingerprint, W9 keep-best
-       shape — GATE-SURVIVING copies rank first (then doc_id), so a
-       low-quality copy can never shadow a kept-eligible one out of the
-       corpus; the batch funnel (training_corpus_pipeline) gets the
-       same best-member election by running gates before dedup;
-    4. cross-batch exact dedup against the compact FINGERPRINT SIDE
-       TABLE (``fp_dir``, default ``<keep_dir>/_fingerprints`` —
-       underscore-prefixed so corpus reads of ``keep_dir`` never see
-       it), appended one partition per batch.  Per-tick probe cost
-       tracks the fingerprint table (one string column, a few % of the
-       corpus bytes), not the text archive — the signature-store
-       pattern (llm/dedup.py:incremental_lsh_dedup).  A legacy
-       ``keep_dir`` without a side table is backfilled once from the
-       kept corpus (batch_id=-1) and probed compactly thereafter.
-
-    5. optional NEAR-dup dedup (``near_dup_threshold``): in-batch
-       MinHash-LSH pairs resolved to cluster canonicals, plus an
-       asymmetric band join against the persisted MinHash SIGNATURE
-       STORE (``sig_dir``, default ``<keep_dir>/_signatures``, appended
-       one partition per batch) — the incremental daily-crawl shape:
-       per-tick cost tracks the batch + matched-band volume, never the
-       archive (:func:`apply_near_dup`).
-
-    Ordering note: reasons are assigned first-match (quality →
-    repetition → duplicate → near_duplicate), so a low-quality copy of
-    a kept doc records ``low_quality``, mirroring the batch funnel's
-    stage order (llm/queries.py:training_corpus_pipeline).
-    """
-    from experts_etl_spark.llm.curation import redact_pii
-
-    if fp_dir is None:
-        fp_dir = os.path.join(keep_dir, "_fingerprints")
-    if sig_dir is None:
-        sig_dir = os.path.join(keep_dir, "_signatures")
-
-    def curate(batch: DataFrame, batch_id: int) -> None:
-        spark_b = batch.sparkSession
-        # Fail-CLOSED probes of the fingerprint side table (stores.py):
-        # only "path not there yet" skips the probe; a real read error
-        # (corrupt file, transient store failure) propagates instead of
-        # silently admitting duplicates.  read_store carries the replay
-        # exclusion (batch_id != current) across BOTH segments of a
-        # compacted store.
-        kept_fps = S.read_store(spark_b, fp_dir, exclude_batch_id=batch_id)
-        if kept_fps is None and S.path_exists(spark_b, keep_dir):
-            # Legacy keep_dir predating the side table: backfill it once
-            # from the kept corpus (batch_id=-1 never collides with a
-            # real micro-batch id), then probe compactly forever after.
-            # CURRENT batch excluded: on an at-least-once replay of
-            # batch N that coincides with the backfill (upgrade, or
-            # fp_dir lost), the first attempt's keep partition is
-            # already on disk — folding it into batch_id=-1 would
-            # defeat the `batch_id != current` replay guard below and
-            # self-reject the whole batch as 'duplicate'.
-            legacy_src = spark_b.read.parquet(keep_dir)
-            if "batch_id" in legacy_src.columns:
-                legacy_src = legacy_src.filter(
-                    F.col("batch_id") != F.lit(batch_id)
-                )
-            legacy = legacy_src.select("fp").distinct()
-            legacy.write.mode("overwrite").parquet(
-                os.path.join(fp_dir, "batch_id=-1")
-            )
-            kept_fps = S.read_store(
-                spark_b, fp_dir, exclude_batch_id=batch_id
-            )
-        staged = route_documents(
-            batch, quality_min, kept_fps
-        ).localCheckpoint(
-            eager=True  # one pass feeds all three sinks; lineage reads fp_dir
-        )
-        if near_dup_threshold is not None:
-            # same at-least-once replay exclusion as the fp probe
-            store = S.read_store(
-                spark_b, sig_dir, exclude_batch_id=batch_id,
-                drop_batch_id=True,
-            )
-            staged, sigs = apply_near_dup(
-                staged, near_dup_threshold, index_signatures=store,
-                lsh_max_df=lsh_max_df,
-            )
-            staged = staged.localCheckpoint(eager=True)
-            # Append the final keepers' signatures to the store: the
-            # next batch's cross-batch near-dup probe band-joins this
-            # compact table, never the text archive.
-            (
-                sigs.join(
-                    staged.filter(
-                        F.col("reject_reason").isNull()
-                    ).select("doc_id"),
-                    "doc_id",
-                )
-                .write.mode("overwrite")
-                .parquet(os.path.join(sig_dir, f"batch_id={batch_id}"))
-            )
-        redacted, _ = redact_pii(F.col("text"))
-        # Idempotent under at-least-once foreachBatch replays: each
-        # batch overwrites ITS OWN batch_id partition (and the fp probe
-        # above excludes it), so a crash between the writes and the
-        # checkpoint commit re-runs the batch into the same directories
-        # instead of appending rows twice.
-        (
-            staged.filter(F.col("reject_reason").isNull())
-            .select(
-                "doc_id",
-                redacted.alias("text"),
-                "lang",
-                "source",
-                "quality",
-                "fp",
-            )
-            .write.mode("overwrite")
-            .parquet(os.path.join(keep_dir, f"batch_id={batch_id}"))
-        )
-        # Append this batch's kept fingerprints to the compact side
-        # table — the next batch's cross-batch probe reads ONLY this
-        # one-column table, so per-tick cost tracks accumulated
-        # fingerprints, not the text archive.  Same overwrite-own-
-        # partition idempotency as the keep/reject sinks.
-        (
-            staged.filter(F.col("reject_reason").isNull())
-            .select("fp")
-            .distinct()
-            .write.mode("overwrite")
-            .parquet(os.path.join(fp_dir, f"batch_id={batch_id}"))
-        )
-        (
-            staged.filter(F.col("reject_reason").isNotNull())
-            .select("doc_id", "lang", "source", "quality", "reject_reason")
-            .write.mode("overwrite")
-            .parquet(os.path.join(reject_dir, f"batch_id={batch_id}"))
-        )
-
-    S.drain(
-        S.file_stream(spark, src, max_files_per_trigger), curate,
-        checkpoint_dir,
-    )

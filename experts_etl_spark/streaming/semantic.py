@@ -1,17 +1,13 @@
-"""Streaming semantic deduplication (SemDeDup over a stream of
-embedding batches) — the embedding analogue of
-``streaming/curation.py``'s near-dup signature store.
+"""The kept-embedding store's SRP index maintenance — the semantic
+dedup stage of ``streaming/tick.py``.
 
-Each arriving batch runs the EXACT sequential greedy
-(``llm/similarity.py:semantic_dedup_incremental``) against the
-persisted KEPT-EMBEDDING STORE: the scan order is everything already
-kept, then the batch's ids ascending, so a semantic near-copy of any
-previously kept vector is rejected without ever rescanning the
-archive — per-tick cost is one asymmetric bucket join against the
-store plus the in-batch fixpoint.  The batch twin is
-``semantic_dedup_incremental`` verbatim (one code path), and the
-composition over an id-ordered split is pinned equal to the full
-``semantic_dedup_sequential`` by the gated
+Each tick runs the EXACT sequential greedy
+(``llm/similarity.py:semantic_dedup_incremental``) of the batch's
+survivors against the persisted KEPT-EMBEDDING STORE: the scan order
+is everything already kept, then the batch's ids ascending, so a
+semantic near-copy of any previously kept vector is rejected without
+ever rescanning the archive.  The composition over an id-ordered split
+is pinned equal to the full ``semantic_dedup_sequential`` by the gated
 ``embedding_semantic_dedup_incremental`` oracle.
 
 The store is a PERSISTED SRP INDEX, not just raw vectors: every kept
@@ -21,37 +17,21 @@ quantize+bucket over the whole archive (``bucketed_cross_hits``'s
 precomputed-bucket arm quantizes only bucket-join survivors —
 batch-proportional work once occupancy is bounded).
 
-The SRP width starts at ``bits`` (choose it for the expected corpus —
-``auto_srp_bits``) and is RE-DERIVED when the store outgrows it: with
-a fixed width, mean bucket occupancy — and
-hence every future probe's candidate volume — grows linearly with the
-archive.  When mean occupancy crosses ``occupancy_limit`` the store
-REBUILDS at ``auto_srp_bits(current count)`` (capped at the embedding
-dimension): every partition's bucket column is recomputed and
-published through ``overwrite_partitions``'s write-audit-publish, with
-a row-count audit that vetoes a lossy rebuild — the PQ codebook
-rebuild loop's shape (streaming/ann_index.py), applied to the
-blocking index instead of the codebooks.  Width is tracked in a
-``_srp_meta`` sidecar; the rebuild stages ``_srp_meta_next`` first and
-swaps it after publish, so a crash anywhere leaves either the old
-consistent (bits, buckets) pair or a resumable marker the next tick
-completes — never a silently mixed-width index.
-
-Idempotency: both sinks are hive-partitioned on ``batch_id`` with
-dynamic partition overwrite, and the store probe EXCLUDES the current
-batch's own partition, so an at-least-once ``foreachBatch`` replay
-rewrites its own partitions instead of appending duplicates or
-self-rejecting the whole batch against its first attempt — the
-``streaming/curation.py`` fingerprint-store guarantees.  A replay
-that lands AFTER a rebuild probes at the new width — decisions are a
-fixpoint of further replays (pinned in
-tests/test_streaming_semantic.py), the same contract as the PQ
-rebuild's retrained books.
-
-Back-compat: a store created without the bucket column (pre-index
-layouts, or the composed tick's store) keeps the compute-at-probe
-path — the index column and the rebuild trigger only engage on stores
-this module created.
+The SRP width starts at the tick's ``sem_bits`` (choose it for the
+expected corpus — ``auto_srp_bits``) and is RE-DERIVED when the store
+outgrows it: with a fixed width, mean bucket occupancy — and hence
+every future probe's candidate volume — grows linearly with the
+archive.  When mean occupancy crosses the limit the store REBUILDS at
+``auto_srp_bits(current count)`` (capped at the embedding dimension):
+every partition's bucket column is recomputed and published through
+``overwrite_partitions``'s write-audit-publish, with a row-count audit
+that vetoes a lossy rebuild — the PQ codebook rebuild loop's shape
+(streaming/ann_index.py), applied to the blocking index instead of the
+codebooks.  Width is tracked in a ``_srp_meta`` sidecar; the rebuild
+stages ``_srp_meta_next`` first and swaps it after publish, so a crash
+anywhere leaves either the old consistent (bits, buckets) pair or a
+resumable marker the next tick completes — never a silently
+mixed-width index.
 """
 
 from __future__ import annotations
@@ -113,8 +93,6 @@ def resolve_srp_width(
     spark: SparkSession,
     store_dir: str,
     default_bits: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> tuple[int, tuple[int, int] | None]:
     """Resolve an SRP store's CURRENT width (crash-safe) — the one
     entry point every prober must call BEFORE joining batch buckets
@@ -136,9 +114,7 @@ def resolve_srp_width(
     meta_next_dir = os.path.join(store_dir, "_srp_meta_next")
     pending = _read_meta(spark, meta_next_dir)
     if pending is not None:
-        _rebucket_store(
-            spark, store_dir, pending[0], pending[1], id_col, vec_col
-        )
+        _rebucket_store(spark, store_dir, pending[0], pending[1])
         _write_meta(spark, meta_dir, pending[0], pending[1])
         S.delete_path(spark, meta_next_dir)
     meta = _read_meta(spark, meta_dir)
@@ -151,13 +127,10 @@ def maybe_rebucket_srp_store(
     bits_cur: int,
     occupancy_limit: int,
     meta: tuple[int, int] | None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> int:
-    """Occupancy-triggered SRP re-widen — the ONE maintenance code
-    path shared by the standalone semantic runner and the composed
-    tick.  The dim comes from the STORE itself, the only party that is
-    always present when the trigger can fire.
+    """Occupancy-triggered SRP re-widen of the tick's kept-embedding
+    store.  The dim comes from the STORE itself, the only party that
+    is always present when the trigger can fire.
 
     Counts the store; when mean occupancy crosses ``occupancy_limit``
     (the :func:`srp_rebucket_decision` rule) the store re-bucketes to
@@ -175,7 +148,7 @@ def maybe_rebucket_srp_store(
         if meta is not None:
             _write_meta(spark, meta_dir, bits_cur, n_kept)
         return bits_cur
-    dim_row = store.select(F.size(F.col(vec_col)).alias("d")).first()
+    dim_row = store.select(F.size(F.col("embedding")).alias("d")).first()
     dim = int(dim_row["d"]) if dim_row is not None else bits_cur
     bits_new = srp_rebucket_decision(n_kept, bits_cur, occupancy_limit, dim)
     if bits_new <= bits_cur:
@@ -185,7 +158,7 @@ def maybe_rebucket_srp_store(
     # stage → publish → swap: _srp_meta_next makes a mid-rebuild
     # crash resumable instead of silently mixed-width
     _write_meta(spark, meta_next_dir, bits_new, n_kept)
-    _rebucket_store(spark, store_dir, bits_new, n_kept, id_col, vec_col)
+    _rebucket_store(spark, store_dir, bits_new, n_kept)
     _write_meta(spark, meta_dir, bits_new, n_kept)
     S.delete_path(spark, meta_next_dir)
     return bits_new
@@ -196,8 +169,6 @@ def _rebucket_store(
     store_dir: str,
     bits_new: int,
     n_expected: int,
-    id_col: str,
-    vec_col: str,
 ) -> None:
     """Recompute every row's bucket column at ``bits_new`` — BOTH the
     live ``batch_id=N`` partitions (published through
@@ -222,9 +193,9 @@ def _rebucket_store(
         if folded is not None:
             live = live.filter(F.col("batch_id") > F.lit(folded))
         live_reb = live.select(
-            id_col,
-            vec_col,
-            srp_bucket(F.col(vec_col), bits_new).alias("bucket"),
+            "vec_id",
+            "embedding",
+            srp_bucket(F.col("embedding"), bits_new).alias("bucket"),
             "batch_id",
         ).localCheckpoint(eager=True)
         n_live = live_reb.count()
@@ -232,9 +203,9 @@ def _rebucket_store(
     if has_seg:
         seg = spark.read.parquet(seg_dir)
         staged = seg.select(
-            id_col,
-            vec_col,
-            srp_bucket(F.col(vec_col), bits_new).alias("bucket"),
+            "vec_id",
+            "embedding",
+            srp_bucket(F.col("embedding"), bits_new).alias("bucket"),
             F.col("batch_id").cast("long").alias("batch_id"),
             "part_key",
         )
@@ -276,104 +247,3 @@ def _rebucket_store(
                 f"{nxt_dir}/{S.FOLDED_MARKER}"
             )
         S._commit_segment(spark, store_dir)
-
-
-def run_streaming_semantic_dedup(
-    spark: SparkSession,
-    src: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    threshold: float,
-    bits: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    probe_hamming: int = 1,
-    store_dir: str | None = None,
-    occupancy_limit: int = DEFAULT_OCCUPANCY_LIMIT,
-    compact_after: int | None = None,
-    max_files_per_trigger: int | None = None,
-) -> None:
-    """Drain ``src`` (``availableNow``) of embedding parquet batches;
-    for each, decide (id, kept) with
-    :func:`~experts_etl_spark.llm.similarity.semantic_dedup_incremental`
-    against the kept-embedding store, write the decisions to
-    ``out_dir/batch_id=N`` and append the batch's KEPT embeddings —
-    with their precomputed SRP bucket at the store's current width —
-    to ``store_dir/batch_id=N`` (default ``<out_dir>/_kept_embeddings``,
-    underscore-prefixed so corpus reads of ``out_dir`` never see it).
-
-    ``bits`` is the CREATION width; once the store exists its width
-    comes from the ``_srp_meta`` sidecar, and the occupancy trigger
-    re-widens it as the store grows (module docstring).  The store
-    carries only kept vectors — the sequential rule's representatives
-    — so the cross-batch probe joins the deduplicated survivor set,
-    not the raw history.
-
-    ``compact_after`` bounds the store's DIRECTORY growth: once more
-    than that many live ``batch_id=N`` partitions accumulate, they fold into the pmod-bucketed
-    ``_compacted`` segment (streaming/stores.py) — decisions are
-    byte-identical across the fold and replays still exclude their own
-    batch by column (tests/test_stores.py)."""
-    from experts_etl_spark.llm.similarity import (
-        semantic_dedup_incremental,
-        srp_bucket,
-    )
-
-    if store_dir is None:
-        store_dir = os.path.join(out_dir, "_kept_embeddings")
-
-    def dedup(batch: DataFrame, batch_id: int) -> None:
-        spark_b = batch.sparkSession
-        # --- resolve the store's current width (crash-safe) ----------
-        bits_cur, meta = resolve_srp_width(
-            spark_b, store_dir, bits, id_col, vec_col
-        )
-
-        # --- probe (fail-closed FS existence; replay exclusion across
-        # BOTH segments of a compacted store — streaming/stores.py) ---
-        store = S.read_store(
-            spark_b, store_dir, exclude_batch_id=batch_id,
-            drop_batch_id=True,
-        )
-        indexed = True  # new stores persist the bucket index
-        if store is not None:
-            indexed = "bucket" in store.columns  # legacy stores: compute
-        decisions = semantic_dedup_incremental(
-            batch, store, id_col, vec_col, threshold, bits_cur, probe_hamming
-        ).localCheckpoint(eager=True)  # one pass feeds both sinks
-        (
-            decisions.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(out_dir)
-        )
-        kept = batch.join(
-            decisions.filter(F.col("kept")).select(id_col), id_col
-        ).select(id_col, vec_col)
-        if indexed:
-            kept = kept.withColumn(
-                "bucket", srp_bucket(F.col(vec_col), bits_cur)
-            )
-        kept.write.mode("overwrite").parquet(
-            os.path.join(store_dir, f"batch_id={batch_id}")
-        )
-        if not indexed:
-            return  # legacy store: no meta, no trigger
-
-        # --- occupancy trigger ---------------------------------------
-        maybe_rebucket_srp_store(
-            spark_b, store_dir, bits_cur, occupancy_limit, meta,
-            id_col, vec_col,
-        )
-        # --- partition-count trigger ---------------------------------
-        if compact_after is not None:
-            S.maybe_compact_store(
-                spark_b, store_dir, id_col,
-                max_live_partitions=compact_after,
-            )
-
-    S.drain(
-        S.file_stream(spark, src, max_files_per_trigger), dedup,
-        checkpoint_dir,
-    )

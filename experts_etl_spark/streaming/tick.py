@@ -34,7 +34,7 @@ funnel pays the whole funnel, store joins included.  Reject reasons
 are FIRST-MATCH in stage order
 (low_quality → repetitive → duplicate → near_duplicate →
 semantic_duplicate), mirroring the batch funnel
-(``training_corpus_pipeline``) and ``run_streaming_curation``.
+(``training_corpus_pipeline``).
 
 Concurrent store I/O: the runner's store probes, sink writes and
 maintenance steps do not depend on one another except along a few
@@ -79,8 +79,8 @@ measured flat against 27×/81× archives in SCALE_FIT.json.
 Idempotency: every sink and store append is hive-partitioned on
 ``batch_id`` with overwrite-own-partition writes, and every store
 probe EXCLUDES the current batch's partition — the at-least-once
-``foreachBatch`` replay guarantees of streaming/curation.py, pinned
-for the composite in tests/test_streaming_tick.py.
+``foreachBatch`` replay guarantees, pinned in
+tests/test_streaming_tick.py.
 """
 
 from __future__ import annotations
@@ -264,9 +264,9 @@ def run_streaming_tick(
     write-audit-publish swap vetoed unless the full-corpus ppm is back
     under threshold.  A replay of the drifting batch encodes against
     the RETRAINED books, measures under threshold, and fires nothing —
-    the rebuild is a fixpoint of the replay, same as the standalone
-    ingest loop.  ``books_path`` must point at standing codebooks
-    (the tick's contract); there is no bootstrap leg here.
+    the rebuild is a fixpoint of the replay.  ``books_path`` must
+    point at standing codebooks (the tick's contract, which
+    ``pq_train`` meets); there is no bootstrap leg here.
 
     The kept-embedding store's SRP width ALWAYS resolves through the
     ``_srp_meta`` sidecar when one exists (completing any
@@ -278,11 +278,10 @@ def run_streaming_tick(
     runs) must never be probed at a stale width, or the
     precomputed-bucket join silently leaks semantic duplicates.  With
     ``sem_occupancy_limit`` set, the store additionally
-    SELF-MAINTAINS exactly like the standalone semantic runner: a
-    store whose mean occupancy crosses the limit re-widens to
-    ``auto_srp_bits(current count)`` (dim-capped) through the shared
+    SELF-MAINTAINS: a store whose mean occupancy crosses the limit
+    re-widens to ``auto_srp_bits(current count)`` (dim-capped) through
     :func:`~experts_etl_spark.streaming.semantic.
-    maybe_rebucket_srp_store` staged write-audit-publish re-bucket.
+    maybe_rebucket_srp_store`'s staged write-audit-publish re-bucket.
 
     ``emb_src`` is the upstream embedding table keyed by doc id
     (vec_id == doc_id); the per-tick lookup joins the BATCH ids

@@ -376,57 +376,50 @@ def test_rebucket_spans_compacted_and_live_segments(spark, tmp_path):
     """The SRP occupancy re-widen must recompute buckets in BOTH the
     folded segment and the live partitions, and later probes reject
     near-copies of vectors archived on either side of the fold."""
-    from experts_etl_spark.llm.similarity import auto_srp_bits, srp_bucket
-    from experts_etl_spark.streaming.semantic import (
-        run_streaming_semantic_dedup,
+    from experts_etl_spark.llm.similarity import (
+        auto_srp_bits,
+        semantic_dedup_incremental,
+        srp_bucket,
     )
+    from experts_etl_spark.streaming.semantic import maybe_rebucket_srp_store
+    from tests.test_streaming_semantic import _srp_store
 
     dim = 32
-    src = tmp_path / "src"
-    src.mkdir()
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    args = dict(threshold=0.35, bits=2, occupancy_limit=4,
-                compact_after=1)
-
-    b1 = spark.createDataFrame(
-        [(i, _onehot(i, dim)) for i in range(10)], EMB_SCHEMA
+    store = str(tmp_path / "_kept_embeddings")
+    # first wave folded, second wave live, both at width 2
+    _srp_store(spark, store, {0: [(i, _onehot(i, dim)) for i in range(10)]}, 2)
+    assert maybe_compact_store(spark, store, "vec_id", max_live_partitions=1)
+    assert live_batch_ids(spark, store) == []
+    _srp_store(
+        spark, store, {1: [(100 + i, _onehot(10 + i, dim)) for i in range(10)]},
+        2,
     )
-    _land(tmp_path, src, b1, "b1")
-    run_streaming_semantic_dedup(spark, str(src), out, ckpt, **args)
-    store = out + "/_kept_embeddings"
-    assert live_batch_ids(spark, store) == []  # folded (10 <= 4*2^2? no:
-    # trigger n>16 not crossed yet, width still 2; fold ran regardless)
 
-    b2 = spark.createDataFrame(
-        [(100 + i, _onehot(10 + i, dim)) for i in range(10)], EMB_SCHEMA
-    )
-    _land(tmp_path, src, b2, "b2")
-    run_streaming_semantic_dedup(spark, str(src), out, ckpt, **args)
     # 20 kept > 4 * 2^2 -> re-widened across BOTH segments
     want_bits = min(auto_srp_bits(20), dim)
     assert want_bits > 2
+    assert maybe_rebucket_srp_store(spark, store, 2, 4, (2, 10)) == want_bits
     meta = spark.read.parquet(store + "/_srp_meta").first()
     assert meta["bits"] == want_bits and meta["n_kept"] == 20
+    assert live_batch_ids(spark, store) == [1]
+    assert glob.glob(store + "/_compacted/part_key=*")
     all_rows = read_store(spark, store)
     assert all_rows.count() == 20
     assert all_rows.filter(
         F.col("bucket") != srp_bucket(F.col("embedding"), want_bits)
     ).count() == 0
 
-    # batch 3 probes at the new width: near-copy of a FOLDED vector
-    # (vec 0) and of a second-wave vector (vec 100) both rejected
+    # a probe at the new width: near-copy of a FOLDED vector (vec 0)
+    # and of a second-wave vector (vec 100) both rejected
     b3 = spark.createDataFrame(
         [(200, _onehot(0, dim)), (201, _onehot(10, dim)),
          (202, _onehot(25, dim))],
         EMB_SCHEMA,
     )
-    _land(tmp_path, src, b3, "b3")
-    run_streaming_semantic_dedup(spark, str(src), out, ckpt, **args)
-    dec = {
-        r["vec_id"]: r["kept"]
-        for r in spark.read.parquet(out).filter(
-            F.col("batch_id") == 2
-        ).collect()
+    dec = semantic_dedup_incremental(
+        b3, read_store(spark, store, drop_batch_id=True),
+        "vec_id", "embedding", 0.35, want_bits,
+    ).collect()
+    assert {r["vec_id"]: r["kept"] for r in dec} == {
+        200: False, 201: False, 202: True
     }
-    assert dec == {200: False, 201: False, 202: True}

@@ -1,6 +1,7 @@
 """Structured Streaming pack: file-source CDC consume, watermarked
 tumbling windows, cross-batch stateful sessionization — each asserted
-equal to its batch twin (SURVEY.md §2.10)."""
+equal to its batch twin (SURVEY.md §2.10) — and the curation tick's
+routing, exact-dedup and near-dup stages across micro-batches."""
 
 from __future__ import annotations
 
@@ -371,14 +372,37 @@ def test_streaming_dedup_drops_redelivered_events(spark, events_feed_dir, tmp_pa
     assert got.exceptAll(want).count() == 0 and want.exceptAll(got).count() == 0
 
 
+def _curate(spark, feed, out, ckpt, **kw):
+    """The curation tick with no embedding source and no codebooks: the
+    routing, exact-dedup, near-dup and substring stages, no semantic or
+    PQ leg."""
+    from experts_etl_spark.streaming.tick import run_streaming_tick
+
+    run_streaming_tick(spark, str(feed), None, out, ckpt, **kw)
+
+
+def _land_rows(spark, tmp_path, feed, batches):
+    """One parquet file per batch of (doc_id, text) rows, landed in
+    batch order."""
+    import glob
+    import shutil
+
+    for i, rows in enumerate(batches):
+        spark.createDataFrame(
+            [(d, t, "en", "s0") for d, t in rows],
+            "doc_id long, text string, lang string, source string",
+        ).coalesce(1).write.parquet(str(tmp_path / f"stage_{i}"))
+        shutil.copy(
+            glob.glob(str(tmp_path / f"stage_{i}" / "*.parquet"))[0],
+            feed / f"docs_{i}.parquet",
+        )
+        os.utime(feed / f"docs_{i}.parquet", (1_700_000_000 + i * 60,) * 2)
+
+
 def test_streaming_curation_routes_and_dedups_across_batches(spark, tmp_path):
     """Keep/reject routing invariants across micro-batches: every doc
     lands exactly once, kept fingerprints are globally unique even when
     a later file re-ships a kept doc, and each rejection has a reason."""
-    from experts_etl_spark.llm.text import fingerprint, quality_score
-    from experts_etl_spark.sources import read_table
-    from experts_etl_spark.streaming import run_streaming_curation
-
     docs = read_table(spark, SF_SMOKE, "documents")
     feed = tmp_path / "doc_feed"
     feed.mkdir()
@@ -388,12 +412,9 @@ def test_streaming_curation_routes_and_dedups_across_batches(spark, tmp_path):
     import glob
     import shutil
 
-    srcs = []
     for i in range(3):
         f = glob.glob(str(tmp_path / f"stage_{i}" / "*.parquet"))[0]
-        dst = feed / f"docs_{i}.parquet"
-        shutil.copy(f, dst)
-        srcs.append(dst)
+        shutil.copy(f, feed / f"docs_{i}.parquet")
     # batch 3 re-ships batch 0's docs under shifted ids: all dups of
     # already-kept content (or copies of already-rejected content)
     redelivered = third[0].withColumn(
@@ -405,19 +426,16 @@ def test_streaming_curation_routes_and_dedups_across_batches(spark, tmp_path):
     for i, name in enumerate(sorted(os.listdir(feed))):
         os.utime(feed / name, (1_700_000_000 + i * 60,) * 2)
 
-    keep, reject = str(tmp_path / "keep"), str(tmp_path / "reject")
-    run_streaming_curation(
-        spark,
-        str(feed),
-        keep_dir=keep,
-        reject_dir=reject,
-        checkpoint_dir=str(tmp_path / "ckpt_cur"),
-        max_files_per_trigger=1,
-    )
-    kept = spark.read.parquet(keep)
-    rejected = spark.read.parquet(reject)
+    out = str(tmp_path / "out")
+    # two files per micro-batch: the re-shipped copies arrive in the
+    # second batch, after batch 0's content was kept
+    _curate(spark, feed, out, str(tmp_path / "ckpt_cur"),
+            max_files_per_trigger=2)
+    kept = spark.read.parquet(out + "/keep")
+    rejected = spark.read.parquet(out + "/reject")
     n_in = docs.count() + redelivered.count()
     assert kept.count() + rejected.count() == n_in
+    assert kept.select("doc_id").distinct().count() == kept.count()
     # kept fingerprints globally unique (cross-batch dedup held)
     assert kept.select("fp").distinct().count() == kept.count()
     # every kept doc passes the gates; every reject has a reason
@@ -429,12 +447,10 @@ def test_streaming_curation_routes_and_dedups_across_batches(spark, tmp_path):
     early_fps = kept.filter(F.col("doc_id") < 1000000).select("fp")
     overlap = shifted_kept.join(early_fps, "fp").count()
     assert overlap == 0
-    # the compact fingerprint side table exists (underscore-prefixed →
-    # invisible to the corpus read above), is partitioned per batch,
-    # and carries exactly the kept fingerprint set — the structure the
+    # the compact fingerprint store is partitioned per batch and
+    # carries exactly the kept fingerprint set — the structure the
     # per-tick probe reads instead of the text archive
-    fp_side = spark.read.parquet(os.path.join(keep, "_fingerprints"))
-    assert "batch_id" in fp_side.columns
+    fp_side = spark.read.parquet(out + "/_fingerprints")
     assert fp_side.select("batch_id").distinct().count() > 1
     side_fps = {r["fp"] for r in fp_side.select("fp").distinct().collect()}
     kept_fps = {r["fp"] for r in kept.select("fp").distinct().collect()}
@@ -444,43 +460,26 @@ def test_streaming_curation_routes_and_dedups_across_batches(spark, tmp_path):
 def test_streaming_curation_rejects_null_text_fail_closed(spark, tmp_path):
     """quality_score(NULL) is NULL; the gate must fail CLOSED (reject
     with low_quality), never route unscorable rows to the keep sink."""
-    from experts_etl_spark.streaming import run_streaming_curation
-
     feed = tmp_path / "feed"
     feed.mkdir()
-    spark.createDataFrame(
-        [
-            (1, None, "en", "s0", 0),
-            (2, "the of and to in is it a good long enough document", "en", "s0", 50),
-        ],
-        "doc_id long, text string, lang string, source string, n_chars long",
-    ).coalesce(1).write.parquet(str(tmp_path / "stage"))
-    import glob
-    import shutil
-
-    shutil.copy(
-        glob.glob(str(tmp_path / "stage" / "*.parquet"))[0],
-        feed / "docs_0.parquet",
-    )
-    keep, reject = str(tmp_path / "keep"), str(tmp_path / "reject")
-    run_streaming_curation(
-        spark, str(feed), keep_dir=keep, reject_dir=reject,
-        checkpoint_dir=str(tmp_path / "ckpt"),
-    )
-    rejected = spark.read.parquet(reject)
+    _land_rows(spark, tmp_path, feed, [[
+        (1, None),
+        (2, "the of and to in is it a good long enough document"),
+    ]])
+    out = str(tmp_path / "out")
+    _curate(spark, feed, out, str(tmp_path / "ckpt"))
+    rejected = spark.read.parquet(out + "/reject")
     row = rejected.filter(F.col("doc_id") == 1).collect()
     assert len(row) == 1 and row[0]["reject_reason"] == "low_quality"
-    kept = spark.read.parquet(keep)
+    kept = spark.read.parquet(out + "/keep")
     assert kept.filter(F.col("doc_id") == 1).count() == 0
 
 
 def test_streaming_curation_near_dup_across_batches(spark, tmp_path):
-    """Optional near-dup stage: in-batch MinHash-LSH clusters resolve to
-    one canonical keeper; later batches' near-copies of kept content are
-    rejected via the persisted signature store (never by re-reading the
-    archive); exact copies still record 'duplicate'."""
-    from experts_etl_spark.streaming import run_streaming_curation
-
+    """Near-dup stage: in-batch MinHash-LSH clusters resolve to one
+    canonical keeper (the min id); later batches' near-copies of kept
+    content are rejected via the persisted signature store (never by
+    re-reading the archive); exact copies still record 'duplicate'."""
     w = "alpha bravo charlie delta echo foxtrot golf hotel india juliet kilo lima mike november"
     text_a = w
     text_b = w.rsplit(" ", 1)[0] + " oscar"          # last word changed
@@ -489,112 +488,23 @@ def test_streaming_curation_near_dup_across_batches(spark, tmp_path):
     text_d = "red green blue cyan magenta yellow black white gray pink teal navy"
     feed = tmp_path / "feed"
     feed.mkdir()
-    import glob
-    import shutil
-
-    batches = [
+    _land_rows(spark, tmp_path, feed, [
         [(1, text_a), (2, text_b), (3, text_c)],
         [(10, text_a2), (11, text_c), (12, text_d)],
-    ]
-    for i, rows in enumerate(batches):
-        spark.createDataFrame(
-            [(d, t, "en", "s0") for d, t in rows],
-            "doc_id long, text string, lang string, source string",
-        ).coalesce(1).write.parquet(str(tmp_path / f"stage_{i}"))
-        shutil.copy(
-            glob.glob(str(tmp_path / f"stage_{i}" / "*.parquet"))[0],
-            feed / f"docs_{i}.parquet",
-        )
-        os.utime(feed / f"docs_{i}.parquet", (1_700_000_000 + i * 60,) * 2)
-    keep, reject = str(tmp_path / "keep"), str(tmp_path / "reject")
-    run_streaming_curation(
-        spark,
-        str(feed),
-        keep_dir=keep,
-        reject_dir=reject,
-        checkpoint_dir=str(tmp_path / "ckpt"),
-        quality_min=0.0,
-        max_files_per_trigger=1,
-        near_dup_threshold=0.5,
-    )
-    kept_ids = {r["doc_id"] for r in spark.read.parquet(keep).collect()}
+    ])
+    out = str(tmp_path / "out")
+    _curate(spark, feed, out, str(tmp_path / "ckpt"), quality_min=0.0,
+            near_dup_threshold=0.5, max_files_per_trigger=1)
+    kept_ids = {r["doc_id"] for r in spark.read.parquet(out + "/keep").collect()}
     assert kept_ids == {1, 3, 12}
     reasons = {
         r["doc_id"]: r["reject_reason"]
-        for r in spark.read.parquet(reject).collect()
+        for r in spark.read.parquet(out + "/reject").collect()
     }
     assert reasons[2] == "near_duplicate"    # in-batch cluster, min id kept
     assert reasons[10] == "near_duplicate"   # cross-batch via signature store
     assert reasons[11] == "duplicate"        # exact copy: earlier reason wins
     # the signature store holds exactly the keepers, one partition/batch
-    store = spark.read.parquet(os.path.join(keep, "_signatures"))
+    store = spark.read.parquet(out + "/_signatures")
     assert {r["doc_id"] for r in store.select("doc_id").collect()} == {1, 3, 12}
     assert store.select("batch_id").distinct().count() == 2
-
-
-def test_streaming_curation_backfill_replay_keeps_current_batch(
-    spark, tmp_path
-):
-    """At-least-once replay of batch N coinciding with the one-time
-    fingerprint backfill (side-table upgrade, or fp_dir lost): the
-    backfill must NOT fold the first attempt's own keep partition into
-    batch_id=-1, or every doc in the replayed batch self-matches as
-    'duplicate' and the keep partition is overwritten with nothing —
-    permanent data loss.  Simulated as: run once (one file = one
-    batch), then delete fp_dir AND the checkpoint so the same file
-    replays as batch 0 against a keep_dir that already holds its first
-    attempt."""
-    import glob
-    import shutil
-
-    from experts_etl_spark.streaming import run_streaming_curation
-
-    rows = [
-        (1, "alpha bravo charlie delta echo foxtrot golf hotel"),
-        (2, "one two three four five six seven eight nine ten"),
-        (3, "red green blue cyan magenta yellow black white gray"),
-    ]
-    feed = tmp_path / "feed"
-    feed.mkdir()
-    spark.createDataFrame(
-        [(d, t, "en", "s0") for d, t in rows],
-        "doc_id long, text string, lang string, source string",
-    ).coalesce(1).write.parquet(str(tmp_path / "stage"))
-    shutil.copy(
-        glob.glob(str(tmp_path / "stage" / "*.parquet"))[0],
-        feed / "docs_0.parquet",
-    )
-    os.utime(feed / "docs_0.parquet", (1_700_000_000,) * 2)
-
-    keep, reject = str(tmp_path / "keep"), str(tmp_path / "reject")
-
-    def run(ckpt):
-        run_streaming_curation(
-            spark,
-            str(feed),
-            keep_dir=keep,
-            reject_dir=reject,
-            checkpoint_dir=str(tmp_path / ckpt),
-            quality_min=0.0,
-        )
-
-    run("ckpt_1")
-    first = spark.read.parquet(keep)
-    first_ids = {r["doc_id"] for r in first.collect()}
-    assert first_ids == {1, 2, 3}
-
-    # Upgrade/loss scenario: side table gone, checkpoint gone → the
-    # same file replays as batch 0 while keep_dir/batch_id=0 exists.
-    shutil.rmtree(os.path.join(keep, "_fingerprints"))
-    run("ckpt_2")
-
-    replay = spark.read.parquet(keep)
-    assert {r["doc_id"] for r in replay.collect()} == first_ids
-    # nothing self-rejected as duplicate on the replay
-    rejected = spark.read.parquet(reject)
-    assert rejected.filter(F.col("reject_reason") == "duplicate").count() == 0
-    # backfill side table rebuilt and consistent with the kept corpus
-    fp_side = spark.read.parquet(os.path.join(keep, "_fingerprints"))
-    side_fps = {r["fp"] for r in fp_side.select("fp").distinct().collect()}
-    kept_fps = {r["fp"] for r in replay.select("fp").distinct().collect()}
-    assert side_fps == kept_fps

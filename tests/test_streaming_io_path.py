@@ -7,7 +7,10 @@ itself ``foreachBatch`` appears only inside :func:`drain`.  No other
 module starts a thread either (``threading.Thread``,
 ``ThreadPoolExecutor``, ``InheritableThread``): concurrent legs go
 through ``stores._concurrently``, which hands every thread the
-micro-batch's Spark job properties."""
+micro-batch's Spark job properties.  ``stores.drain`` has three
+callers: the curation tick, the IVFADC probe runner and the CDC
+consume; a curation stage runs inside the tick, not beside it in a
+runner of its own."""
 
 from __future__ import annotations
 
@@ -21,6 +24,10 @@ PKG_DIR = os.path.dirname(streaming_pkg.__file__)
 FORBIDDEN_CALLS = {"os.path.exists", "os.listdir", "org.apache.hadoop.fs.Path"}
 FORBIDDEN_ATTRS = {"getFileSystem", "foreachBatch"}
 THREAD_NAMES = {"Thread", "ThreadPoolExecutor", "InheritableThread"}
+DRAIN_CALLERS = {
+    "run_streaming_tick", "run_streaming_ivfpq_search",
+    "run_incremental_consume",
+}
 
 
 def _violations(path: str) -> list[str]:
@@ -78,3 +85,34 @@ def test_streaming_threads_start_only_in_stores():
     assert _thread_uses(stores_py), "stores.py no longer starts the legs"
     bad = [v for m in modules if m != stores_py for v in _thread_uses(m)]
     assert not bad, "threads started outside stores.py:\n" + "\n".join(bad)
+
+
+def _drain_callers(path: str) -> list[tuple[str, int]]:
+    """(top-level function, line) of every call to ``drain``."""
+    tree = ast.parse(open(path).read(), path)
+    out = []
+    for top in tree.body:
+        owner = getattr(top, "name", "<module>")
+        for node in ast.walk(top):
+            if isinstance(node, ast.Call):
+                f = node.func
+                name = f.attr if isinstance(f, ast.Attribute) else getattr(
+                    f, "id", None
+                )
+                if name == "drain":
+                    out.append((owner, node.lineno))
+    return out
+
+
+def test_drain_has_only_the_three_runners():
+    modules = sorted(glob.glob(os.path.join(PKG_DIR, "*.py")))
+    calls = {
+        f"{m}:{line} {owner}": owner
+        for m in modules
+        for owner, line in _drain_callers(m)
+    }
+    bad = [k for k, owner in calls.items() if owner not in DRAIN_CALLERS]
+    assert not bad, "stores.drain called outside the runners:\n" + "\n".join(
+        bad
+    )
+    assert set(calls.values()) == DRAIN_CALLERS

@@ -1,7 +1,9 @@
-"""Streaming PQ index maintenance (streaming/ann_index.py): batches
-encode against persisted codebooks with no retrain; the result equals
-the batch-side incremental encoder; checkpointed re-runs are no-ops;
-new arrivals extend the index without touching old partitions."""
+"""Streaming ANN index (streaming/ann_index.py): the tick's PQ leg
+encodes keepers against persisted codebooks with no retrain, equal to
+the batch-side incremental encoder, and a new batch extends the index
+without touching old partitions; the probe-side IVFADC runner equals
+the batch search per micro-batch and replays idempotently; the PQ
+rebuild composes with a folded code store."""
 
 from __future__ import annotations
 
@@ -11,66 +13,102 @@ import shutil
 
 from pyspark.sql import functions as F
 
-from experts_etl_spark.llm.pq import pq_encode_incremental, pq_train
+from experts_etl_spark.llm.pq import pq_encode_incremental
 from experts_etl_spark.sources import read_table
-from experts_etl_spark.streaming.ann_index import run_streaming_pq_encode
 from tests.conftest import SF_SMOKE
+from tests.test_streaming_tick import (
+    DOC_SCHEMA,
+    EMB_SCHEMA,
+    _doc,
+    _drift_step,
+    _far,
+    _land,
+    _pq_batch,
+    _pq_stores,
+    _rows,
+    _tight,
+)
 
 
 def test_streaming_pq_encode_matches_batch_and_is_idempotent(spark, tmp_path):
-    e = read_table(spark, SF_SMOKE, "embeddings")
-    existing = e.filter(F.col("vec_id") % 2 == 0)
-    arriving = e.filter(F.col("vec_id") % 2 == 1)
+    """Books trained on vectors that never arrive; two batches of
+    keepers drained through the tick's PQ leg (drift step off, so this
+    pins the encode alone).  Each batch's code rows equal
+    pq_encode_incremental against the standing books, the books are
+    never retrained, a drain with nothing new leaves the index as it
+    was, and a second batch lands in its own partition without
+    touching the first."""
+    from experts_etl_spark.llm.pq import pq_train
+    from experts_etl_spark.streaming.tick import run_streaming_tick
 
-    books_path = str(tmp_path / "books")
-    _, books = pq_train(existing, "vec_id", "embedding", m=4, iters=2)
-    books.write.parquet(books_path)
-
-    src = tmp_path / "src"
-    src.mkdir()
-
-    def land(df, name):
-        stage = tmp_path / f"stage_{name}"
-        df.coalesce(1).write.parquet(str(stage))
-        (part,) = glob.glob(str(stage / "*.parquet"))
-        shutil.copy(part, src / f"{name}.parquet")
-
-    batch1 = arriving.filter(F.col("vec_id") % 4 == 1)
-    batch2 = arriving.filter(F.col("vec_id") % 4 == 3)
-    land(batch1, "b1")
-    src = str(src)
-
-    index_dir = str(tmp_path / "index")
-    ckpt = str(tmp_path / "ckpt")
-    run_streaming_pq_encode(spark, src, books_path, index_dir, ckpt)
-
-    got1 = spark.read.parquet(index_dir)
-    want1 = pq_encode_incremental(
-        batch1, spark.read.parquet(books_path), "vec_id", "embedding", 4
+    m, dim = 4, 8
+    embs = spark.createDataFrame(
+        [(i, [float((i * (j + 2)) % 37) for j in range(dim)])
+         for i in range(24)],
+        EMB_SCHEMA,
     )
-    assert sorted(
-        map(tuple, got1.select("vec_id", "sub_id", "code_id", "n2").collect())
-    ) == sorted(map(tuple, want1.collect()))
+    existing = embs.filter(F.col("vec_id") % 2 == 0)
+    batch1 = embs.filter(F.col("vec_id") % 4 == 1)
+    batch2 = embs.filter(F.col("vec_id") % 4 == 3)
 
-    # replay with the same checkpoint: nothing new arrives, index stable
-    run_streaming_pq_encode(spark, src, books_path, index_dir, ckpt)
-    assert spark.read.parquet(index_dir).count() == got1.count()
+    def docs(batch):
+        ids = sorted(r["vec_id"] for r in batch.select("vec_id").collect())
+        return spark.createDataFrame(
+            [_doc(i, [f"doc{i}w{k:03d}" for k in range(80)]) for i in ids],
+            DOC_SCHEMA,
+        )
 
-    # a new file extends the index; old partitions untouched
-    stage2 = os.path.join(str(tmp_path), "stage_b2")
-    batch2.coalesce(1).write.parquet(stage2)
-    (part2,) = glob.glob(os.path.join(stage2, "*.parquet"))
-    shutil.copy(part2, os.path.join(src, "b2.parquet"))
-    run_streaming_pq_encode(spark, src, books_path, index_dir, ckpt)
+    emb_dir = str(tmp_path / "embs")
+    embs.write.parquet(emb_dir)
+    books_dir = str(tmp_path / "books")
+    _, books = pq_train(existing, "vec_id", "embedding", m=m, iters=2)
+    books.write.parquet(books_dir)
+    books0 = _rows(spark.read.parquet(books_dir))
+    src_dir = tmp_path / "src"
+    src_dir.mkdir()
+    out = str(tmp_path / "out")
+    index_dir = out + "/_pq_index"
+
+    def _tick():
+        run_streaming_tick(
+            spark,
+            str(src_dir),
+            emb_dir,
+            out,
+            str(tmp_path / "ckpt"),
+            sem_threshold=1.5,  # inert: every doc is a keeper
+            books_path=books_dir,
+            pq_m=m,
+            pq_recon_ppm_threshold=None,
+        )
+
+    def encode(batch):
+        return pq_encode_incremental(
+            batch, spark.read.parquet(books_dir), "vec_id", "embedding", m
+        )
+
+    cols = ["vec_id", "sub_id", "code_id", "n2"]
+    _land(tmp_path, src_dir, docs(batch1), "b1")
+    _tick()
+    index1 = spark.read.parquet(index_dir)
+    assert _rows(index1.select(*cols)) == _rows(encode(batch1).select(*cols))
+    assert _rows(index1.select("batch_id").distinct()) == [(0,)]
+    got1 = _rows(index1)
+
+    # a drain with nothing new: index stable
+    _tick()
+    assert _rows(spark.read.parquet(index_dir)) == got1
+
+    # a new file extends the index in its own partition; the first
+    # partition is untouched and the books were never retrained
+    _land(tmp_path, src_dir, docs(batch2), "b2")
+    _tick()
     got2 = spark.read.parquet(index_dir)
-    assert got2.count() == got1.count() + batch2.count() * 4
-    # every arriving vector encoded exactly m rows, same codes as batch
-    want_all = pq_encode_incremental(
-        arriving, spark.read.parquet(books_path), "vec_id", "embedding", 4
-    )
-    assert sorted(
-        map(tuple, got2.select("vec_id", "sub_id", "code_id", "n2").collect())
-    ) == sorted(map(tuple, want_all.collect()))
+    assert got2.count() == len(got1) + batch2.count() * m
+    assert _rows(got2.filter(F.col("batch_id") == 0)) == got1
+    arriving = batch1.unionByName(batch2)
+    assert _rows(got2.select(*cols)) == _rows(encode(arriving).select(*cols))
+    assert _rows(spark.read.parquet(books_dir)) == books0
 
 
 def test_streaming_ivfpq_search_matches_batch_and_is_idempotent(spark, tmp_path):
@@ -144,65 +182,39 @@ def test_streaming_ivfpq_search_matches_batch_and_is_idempotent(spark, tmp_path)
 
 
 def test_pq_ingest_fold_and_rebuild_compose(spark, tmp_path):
-    """r13 verdict next #7: store compaction and the transactional
-    rebuild COMPOSE on the PQ code store.  Two benign ticks at
-    compact_after=2 fold both the raw-embedding archive and the code
-    table into their _compacted segments; a third, drifted tick then
-    fires the rebuild, whose re-encode must (a) read the archive ACROSS
-    the fold boundary, (b) drop the code store's folded segment before
-    republishing (a surviving _folded watermark would mask the
+    """Store compaction and the transactional rebuild COMPOSE on the
+    PQ code store.  Two benign ticks folded into their _compacted
+    segments (the archive and the code table); a third, drifted tick
+    then fires the rebuild, whose re-encode must (a) read the archive
+    ACROSS the fold boundary, (b) drop the code store's folded segment
+    before republishing (a surviving _folded watermark would mask the
     republished live partitions and keep serving stale old-book rows),
-    and (c) publish exactly one code set per archived id, byte-equal to
-    a from-scratch encode of the compacted archive under the published
-    books.  A re-drain on the committed checkpoint changes nothing."""
-    from experts_etl_spark.streaming.ann_index import (
-        run_streaming_pq_ingest_with_rebuild,
+    and (c) publish exactly one code set per archived id, byte-equal
+    to a from-scratch encode of the compacted archive under the
+    published books.  The tick's replay changes nothing."""
+    from experts_etl_spark.streaming.stores import (
+        maybe_compact_store,
+        read_store,
     )
-    from experts_etl_spark.streaming.stores import read_store
 
-    dim = 8
-    schema = "vec_id long, embedding array<float>"
-    b1 = spark.createDataFrame(
-        [(i, [float((i % 3) + 1)] * dim) for i in range(24)], schema
-    )
-    b2 = spark.createDataFrame(
-        [(24 + i, [float((i % 3) + 1)] * dim) for i in range(24)], schema
-    )
-    b3 = spark.createDataFrame(
-        [(100 + i, [1000.0 + float(i % 3)] * dim) for i in range(24)], schema
-    )
-    src = tmp_path / "src"
-    src.mkdir()
+    b1 = spark.createDataFrame(_tight(range(24)), EMB_SCHEMA)
+    b2 = spark.createDataFrame(_tight(range(24, 48)), EMB_SCHEMA)
+    b3 = spark.createDataFrame(_far(range(100, 124)), EMB_SCHEMA)
+    dirs = _pq_stores(spark, tmp_path, [b1, b2])
+    for d in (dirs["arch"], dirs["codes"]):
+        assert maybe_compact_store(spark, d, "vec_id", max_live_partitions=2)
+    assert os.path.isdir(dirs["codes"] + "/_compacted")
+    assert os.path.isdir(dirs["arch"] + "/_compacted")
+    assert not glob.glob(dirs["codes"] + "/batch_id=*")
 
-    def land(df, name):
-        stage = tmp_path / f"stage_{name}"
-        df.coalesce(1).write.parquet(str(stage))
-        (part,) = glob.glob(str(stage / "*.parquet"))
-        shutil.copy(part, src / f"{name}.parquet")
-
-    idx = str(tmp_path / "index")
-    ckpt = str(tmp_path / "ckpt")
-    args = dict(recon_ppm_threshold=200000, compact_after=2)
-
-    land(b1, "b1")
-    run_streaming_pq_ingest_with_rebuild(spark, str(src), idx, ckpt, **args)
-    land(b2, "b2")
-    run_streaming_pq_ingest_with_rebuild(spark, str(src), idx, ckpt, **args)
-    # both stores folded: live batch dirs gone, segments committed
-    assert os.path.isdir(idx + "/codes/_compacted")
-    assert os.path.isdir(idx + "/_embeddings/_compacted")
-    assert not glob.glob(idx + "/codes/batch_id=*")
-    assert not glob.glob(idx + "/_rebuilds/*")
-
-    land(b3, "b3")
-    run_streaming_pq_ingest_with_rebuild(spark, str(src), idx, ckpt, **args)
-    audit = spark.read.parquet(idx + "/_rebuilds").collect()
+    _pq_batch(spark, dirs, 2, b3)
+    _drift_step(spark, dirs, 2, b3, 200000)
+    audit = spark.read.parquet(dirs["audit"]).collect()
     assert len(audit) == 1 and audit[0]["post_ppm"] <= 200000
 
-    codes = read_store(spark, idx + "/codes")
-    got = sorted(
-        map(tuple, codes.select("vec_id", "sub_id", "code_id").collect())
-    )
+    cols = ["vec_id", "sub_id", "code_id"]
+    codes = read_store(spark, dirs["codes"])
+    got = _rows(codes.select(*cols))
     # exactly one code set per archived id — no stale fold rows survive
     per_id = (
         codes.groupBy("vec_id").count().select("count").distinct().collect()
@@ -212,24 +224,14 @@ def test_pq_ingest_fold_and_rebuild_compose(spark, tmp_path):
 
     # byte-equal to a from-scratch encode of the (fold-crossing) archive
     # under the PUBLISHED books
-    arch = read_store(spark, idx + "/_embeddings", drop_batch_id=True)
-    books = spark.read.parquet(idx + "/_books")
-    want = sorted(
-        map(
-            tuple,
-            pq_encode_incremental(arch, books, "vec_id", "embedding")
-            .select("vec_id", "sub_id", "code_id")
-            .collect(),
-        )
-    )
-    assert got == want
+    arch = read_store(spark, dirs["arch"], drop_batch_id=True)
+    books = spark.read.parquet(dirs["books"])
+    want = pq_encode_incremental(arch, books, "vec_id", "embedding")
+    assert got == _rows(want.select(*cols))
 
-    # re-drain on the committed checkpoint: nothing re-fires, codes and
-    # books byte-stable
-    run_streaming_pq_ingest_with_rebuild(spark, str(src), idx, ckpt, **args)
-    assert len(spark.read.parquet(idx + "/_rebuilds").collect()) == 1
-    codes2 = read_store(spark, idx + "/codes")
-    got2 = sorted(
-        map(tuple, codes2.select("vec_id", "sub_id", "code_id").collect())
-    )
-    assert got2 == got
+    # the tick's replay of batch 2 encodes against the published books
+    # and measures under threshold: nothing re-fires, codes stable
+    _pq_batch(spark, dirs, 2, b3)
+    _drift_step(spark, dirs, 2, b3, 200000)
+    assert len(spark.read.parquet(dirs["audit"]).collect()) == 1
+    assert _rows(read_store(spark, dirs["codes"]).select(*cols)) == got

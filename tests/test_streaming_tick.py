@@ -1,16 +1,20 @@
 """The composed incremental tick (streaming/tick.py) and the PQ
-rebuild loop (streaming/ann_index.py:run_streaming_pq_ingest_with_
-rebuild) — r10 verdict missing #3 / next #7.
+maintenance steps its PQ leg runs (streaming/ann_index.py:pq_drift_step
+and maybe_rebuild_pq_index).
 
 Tick tests pin: cross-batch rejections from every store (exact
 fingerprint, MinHash signature, kept-embedding, hot-window), reason
 precedence, the PQ-index append for keepers, the Spark-job count of a
-store-probing tick (each shared stage boundary runs once), and
-at-least-once replay idempotency across ALL sinks at once.
+store-probing tick (each shared stage boundary runs once), at-least-once
+replay idempotency across ALL sinks at once, the drift rebuild inside
+the tick, and the SRP re-widen of the kept-embedding store.
 
-Rebuild tests pin: a drifted batch fires the retrain exactly once,
-the re-encoded index passes the write-audit-publish gate (post ppm
-back under threshold), and a replay leaves books/audit untouched.
+Helper tests drive ``pq_drift_step`` / ``maybe_rebuild_pq_index`` over
+hand-written stores in the tick's layout: one rebuild on drift and a
+replay-stable fixpoint after it, latest-batch-wins compaction
+of re-arrived ids, deletion of fully superseded code partitions, the
+read-only veto, and first-contact calibration of the ``"auto"``
+threshold.
 """
 
 from __future__ import annotations
@@ -52,6 +56,76 @@ def _emb(vec_id, hot_dim, dim=8, base=1.0):
     v = [0.0] * dim
     v[hot_dim] = base
     return (vec_id, v)
+
+
+def _tight(ids, dim=8):
+    """Three constant vectors near the origin: books trained on them
+    represent them almost exactly."""
+    return [(i, [float((i % 3) + 1)] * dim) for i in ids]
+
+
+def _far(ids, dim=8):
+    """A cluster far from ``_tight``'s: books trained there cannot
+    represent it (relative recon error ≈ 1e6 ppm)."""
+    return [(i, [1000.0 + float(i % 3)] * dim) for i in ids]
+
+
+def _pq_dirs(root):
+    """The tick's PQ store layout under ``root``."""
+    return {
+        "arch": str(root / "_kept_embeddings"),
+        "codes": str(root / "_pq_index"),
+        "books": str(root / "books"),
+        "audit": str(root / "_pq_rebuilds"),
+        "intr": str(root / "_pq_intrinsic"),
+    }
+
+
+def _pq_batch(spark, dirs, batch_id, emb):
+    """What the tick's PQ leg writes for a batch of keepers before its
+    drift step: the archive partition and the codes under the standing
+    books."""
+    from experts_etl_spark.llm.pq import pq_encode_incremental
+
+    emb.write.mode("overwrite").parquet(f"{dirs['arch']}/batch_id={batch_id}")
+    pq_encode_incremental(
+        emb, spark.read.parquet(dirs["books"]), "vec_id", "embedding"
+    ).write.mode("overwrite").parquet(f"{dirs['codes']}/batch_id={batch_id}")
+
+
+def _drift_step(spark, dirs, batch_id, emb, threshold):
+    from experts_etl_spark.streaming.ann_index import pq_drift_step
+
+    pq_drift_step(
+        spark,
+        emb,
+        spark.read.parquet(dirs["books"]),
+        batch_id=batch_id,
+        threshold=threshold,
+        m=None,
+        arch_dir=dirs["arch"],
+        codes_dir=dirs["codes"],
+        books_dir=dirs["books"],
+        audit_dir=dirs["audit"],
+        intr_dir=dirs["intr"],
+    )
+
+
+def _pq_stores(spark, root, batches):
+    """PQ stores after one tick per batch, with standing books trained
+    on the first batch and no drift step run."""
+    from experts_etl_spark.llm.pq import pq_train
+
+    dirs = _pq_dirs(root)
+    _, books = pq_train(batches[0], "vec_id", "embedding", iters=1)
+    books.write.parquet(dirs["books"])
+    for bid, b in enumerate(batches):
+        _pq_batch(spark, dirs, bid, b)
+    return dirs
+
+
+def _rows(df):
+    return sorted(map(tuple, df.collect()))
 
 
 @pytest.fixture()
@@ -212,6 +286,19 @@ def test_tick_cross_batch_rejections_from_every_store(spark, tick_env, tmp_path)
     }
     assert counts[0] == 4 * m  # keepers 0,1,2,3
     assert counts[1] == 2 * m  # keepers 13,14
+    # batch 1's code rows are the keepers' encode against the tick's books
+    from experts_etl_spark.llm.pq import pq_encode_incremental
+
+    cols = ["vec_id", "sub_id", "code_id", "n2"]
+    keepers = spark.read.parquet(env["emb"]).filter(
+        F.col("vec_id").isin(13, 14)
+    )
+    want = pq_encode_incremental(
+        keepers, spark.read.parquet(env["books"]), "vec_id", "embedding", m
+    )
+    assert _rows(pq.filter(F.col("batch_id") == 1).select(*cols)) == _rows(
+        want.select(*cols)
+    )
 
 
 def test_tick_replay_is_idempotent(spark, tick_env, tmp_path):
@@ -221,31 +308,21 @@ def test_tick_replay_is_idempotent(spark, tick_env, tmp_path):
     _land(tmp_path, env["src"], env["b2"], "b2")
     _run(spark, env)
 
-    def snapshot():
-        out = {}
-        for sink in ("keep", "reject", "_fingerprints", "_signatures",
-                     "_window_counts", "_kept_embeddings", "_pq_index"):
-            df = spark.read.parquet(f"{env['out']}/{sink}")
-            out[sink] = sorted(map(tuple, df.collect()))
-        return out
-
-    before = snapshot()
+    before = _snapshot(spark, env["out"])
     # at-least-once replay: drain again with no new files — every sink
     # and store must be byte-stable (probes exclude own partitions, so
     # no batch self-rejects against its first attempt)
     _run(spark, env)
-    assert snapshot() == before
+    assert _snapshot(spark, env["out"]) == before
 
 
 def _snapshot(spark, out):
-    """Every sink's and store's rows (``test_tick_replay_is_idempotent``'s
-    snapshot)."""
-    snap = {}
-    for sink in ("keep", "reject", "_fingerprints", "_signatures",
-                 "_window_counts", "_kept_embeddings", "_pq_index"):
-        df = spark.read.parquet(f"{out}/{sink}")
-        snap[sink] = sorted(map(tuple, df.collect()))
-    return snap
+    """Every sink's and store's rows."""
+    return {
+        sink: _rows(spark.read.parquet(f"{out}/{sink}"))
+        for sink in ("keep", "reject", "_fingerprints", "_signatures",
+                     "_window_counts", "_kept_embeddings", "_pq_index")
+    }
 
 
 def test_tick_failed_leg_fails_batch_and_replay_converges(
@@ -287,140 +364,96 @@ def test_tick_failed_leg_fails_batch_and_replay_converges(
     assert _snapshot(spark, env["out"]) == _snapshot(spark, clean["out"])
 
 
+def test_pq_first_contact_calibrates_and_never_wedges(spark, tmp_path):
+    """The ``"auto"`` threshold with nothing on record (no rebuild, no
+    intrinsic marker) must not fire a rebuild, even on a batch whose
+    ppm is far above the floor: a floor below the corpus's intrinsic
+    error would fire a futile rebuild whose veto wedges the stream on
+    every replay.  The step records the batch's ppm as the intrinsic
+    marker instead, and its replay writes the same marker and again
+    rebuilds nothing."""
+    from experts_etl_spark.llm.pq import pq_recon_ppm
+    from experts_etl_spark.streaming.ann_index import DEFAULT_PQ_RECON_PPM
+
+    b1 = spark.createDataFrame(_tight(range(24)), EMB_SCHEMA)
+    b2 = spark.createDataFrame(_far(range(100, 124)), EMB_SCHEMA)
+    dirs = _pq_stores(spark, tmp_path, [b1, b2])
+    books = spark.read.parquet(dirs["books"])
+    ppm = pq_recon_ppm(b2, books, "vec_id", "embedding")
+    assert ppm > 4 * DEFAULT_PQ_RECON_PPM
+    codes0, books0 = _rows(spark.read.parquet(dirs["codes"])), _rows(books)
+
+    for _ in range(2):  # the tick's step, then its replay
+        _drift_step(spark, dirs, 1, b2, "auto")
+        assert _rows(spark.read.parquet(dirs["intr"])) == [(1, ppm)]
+        assert not glob.glob(dirs["audit"] + "/*")
+        assert _rows(spark.read.parquet(dirs["codes"])) == codes0
+        assert _rows(spark.read.parquet(dirs["books"])) == books0
+
+
 def test_pq_rebuild_fires_once_and_is_replay_stable(spark, tmp_path):
-    from experts_etl_spark.streaming.ann_index import (
-        run_streaming_pq_ingest_with_rebuild,
-    )
+    """The drift step over the tick's PQ stores: a batch the books
+    represent fires nothing; a far-shifted batch fires exactly one
+    rebuild (pre over the threshold, post under it) that retrains the
+    books and re-encodes every archived vector under them.  The
+    batch's replay, re-encoded under the published books as the PQ
+    leg does, measures under threshold and leaves audit, books and
+    codes as they were."""
+    from experts_etl_spark.llm.pq import pq_encode_incremental, pq_recon_ppm
 
-    dim = 8
-    # batch 1: tight cluster near the origin; batch 2: a far shifted
-    # cluster the batch-1 codebooks cannot represent (relative recon
-    # error ≈ 1e6 ppm) → rebuild
-    b1 = spark.createDataFrame(
-        [(i, [float((i % 3) + 1)] * dim) for i in range(24)], EMB_SCHEMA
-    )
-    b2 = spark.createDataFrame(
-        [(100 + i, [1000.0 + float(i % 3)] * dim) for i in range(24)],
-        EMB_SCHEMA,
-    )
-    src_dir = tmp_path / "src"
-    src_dir.mkdir()
-    idx = str(tmp_path / "index")
-    ckpt = str(tmp_path / "ckpt")
-    args = dict(recon_ppm_threshold=200000)
+    b1 = spark.createDataFrame(_tight(range(24)), EMB_SCHEMA)
+    b2 = spark.createDataFrame(_far(range(100, 124)), EMB_SCHEMA)
+    dirs = _pq_stores(spark, tmp_path, [b1])
+    _drift_step(spark, dirs, 0, b1, 200000)
+    assert not glob.glob(dirs["audit"] + "/*")  # no drift on batch 0
+    books1 = _rows(spark.read.parquet(dirs["books"]))
 
-    _land(tmp_path, src_dir, b1, "b1")
-    run_streaming_pq_ingest_with_rebuild(spark, str(src_dir), idx, ckpt, **args)
-    # bootstrap tick: books trained on batch 1, no rebuild
-    assert not glob.glob(idx + "/_rebuilds/*")
-    books1 = sorted(map(tuple, spark.read.parquet(idx + "/_books").collect()))
-
-    _land(tmp_path, src_dir, b2, "b2")
-    run_streaming_pq_ingest_with_rebuild(spark, str(src_dir), idx, ckpt, **args)
-    audit = spark.read.parquet(idx + "/_rebuilds").collect()
+    _pq_batch(spark, dirs, 1, b2)
+    _drift_step(spark, dirs, 1, b2, 200000)
+    audit = spark.read.parquet(dirs["audit"]).collect()
     assert len(audit) == 1
-    assert audit[0]["pre_ppm"] > 200000
-    assert audit[0]["post_ppm"] <= 200000
-    books2 = sorted(map(tuple, spark.read.parquet(idx + "/_books").collect()))
+    assert audit[0]["pre_ppm"] > 200000 >= audit[0]["post_ppm"]
+    books2 = _rows(spark.read.parquet(dirs["books"]))
     assert books2 != books1  # retrained
-    # every archived vector re-encoded under the new books
-    codes = spark.read.parquet(idx + "/codes")
-    assert codes.select("vec_id").distinct().count() == 48
+    # every archived vector re-encoded under the published books
+    cols = ["vec_id", "sub_id", "code_id", "n2"]
+    codes_df = spark.read.parquet(dirs["codes"])
+    arch = spark.read.parquet(dirs["arch"]).drop("batch_id")
+    want = pq_encode_incremental(
+        arch, spark.read.parquet(dirs["books"]), "vec_id", "embedding"
+    )
+    assert _rows(codes_df.select(*cols)) == _rows(want.select(*cols))
+    assert codes_df.select("vec_id").distinct().count() == 48
+    codes = _rows(codes_df)
 
-    # replay: the retrained books are a fixpoint — batch 2 now measures
-    # under threshold, no second rebuild, books byte-stable
-    run_streaming_pq_ingest_with_rebuild(spark, str(src_dir), idx, ckpt, **args)
-    assert len(spark.read.parquet(idx + "/_rebuilds").collect()) == 1
-    books3 = sorted(map(tuple, spark.read.parquet(idx + "/_books").collect()))
-    assert books3 == books2
-
+    # replay: the retrained books are a fixpoint — batch 1 now measures
+    # under threshold, no second rebuild, books and codes byte-stable
+    _pq_batch(spark, dirs, 1, b2)
+    _drift_step(spark, dirs, 1, b2, 200000)
+    assert len(spark.read.parquet(dirs["audit"]).collect()) == 1
+    assert _rows(spark.read.parquet(dirs["books"])) == books2
+    assert _rows(spark.read.parquet(dirs["codes"])) == codes
     # and the post-rebuild drift really is back under threshold
-    from experts_etl_spark.llm.pq import pq_recon_ppm
-
-    corpus = spark.read.parquet(idx + "/_embeddings").drop("batch_id")
-    books = spark.read.parquet(idx + "/_books")
-    assert pq_recon_ppm(corpus, books, "vec_id", "embedding") <= 200000
-
-
-def test_pq_bootstrap_below_intrinsic_threshold_never_wedges(
-    spark, tmp_path
-):
-    """r11 ADVICE: a recon_ppm_threshold below the intrinsic PQ
-    quantization error must NOT fire a futile same-data rebuild on the
-    bootstrap tick (post_ppm == pre_ppm → audit veto → stream wedged
-    on every replay).  The drift check is skipped for the bootstrap
-    batch — including its at-least-once REPLAY (fresh checkpoint, same
-    index state), which re-measures against books trained on itself."""
-    from experts_etl_spark.streaming.ann_index import (
-        run_streaming_pq_ingest_with_rebuild,
-    )
-
-    dim = 8
-    # diverse vectors: intrinsic recon error well above threshold=1
-    b1 = spark.createDataFrame(
-        [(i, [float((i * (j + 2)) % 37) for j in range(dim)])
-         for i in range(24)],
-        EMB_SCHEMA,
-    )
-    src_dir = tmp_path / "src"
-    src_dir.mkdir()
-    idx = str(tmp_path / "index")
-    args = dict(recon_ppm_threshold=1)
-
-    _land(tmp_path, src_dir, b1, "b1")
-    run_streaming_pq_ingest_with_rebuild(
-        spark, str(src_dir), idx, str(tmp_path / "ckpt1"), **args
-    )
-    assert not glob.glob(idx + "/_rebuilds/*")
-    books1 = sorted(map(tuple, spark.read.parquet(idx + "/_books").collect()))
-    from experts_etl_spark.llm.pq import pq_recon_ppm
-
-    corpus = spark.read.parquet(idx + "/_embeddings").drop("batch_id")
-    books = spark.read.parquet(idx + "/_books")
-    assert pq_recon_ppm(corpus, books, "vec_id", "embedding") > 1
-
-    # replay of the bootstrap batch (uncommitted checkpoint → fresh
-    # checkpoint dir, standing index): must not rebuild, must not fail
-    run_streaming_pq_ingest_with_rebuild(
-        spark, str(src_dir), idx, str(tmp_path / "ckpt2"), **args
-    )
-    assert not glob.glob(idx + "/_rebuilds/*")
-    books2 = sorted(map(tuple, spark.read.parquet(idx + "/_books").collect()))
-    assert books2 == books1
+    arch = spark.read.parquet(dirs["arch"]).drop("batch_id")
+    assert pq_recon_ppm(
+        arch, spark.read.parquet(dirs["books"]), "vec_id", "embedding"
+    ) <= 200000
 
 
 def test_pq_rebuild_compacts_cross_batch_duplicate_ids(spark, tmp_path):
-    """r11 ADVICE: an id that legitimately re-arrives in a later batch
-    is a correction — the rebuild compacts the archive latest-batch-
-    wins before retrain/re-encode, so the audit's distinct-id check
-    passes and the re-encode join never fans out."""
-    from experts_etl_spark.streaming.ann_index import (
-        run_streaming_pq_ingest_with_rebuild,
-    )
+    """An id that legitimately re-arrives in a later batch is a
+    correction — the rebuild compacts the archive latest-batch-wins
+    before retrain/re-encode, so the audit's distinct-id check passes
+    and the re-encode join never fans out."""
+    b1 = spark.createDataFrame(_tight(range(24)), EMB_SCHEMA)
+    # ids 12..35 arrive shifted with the new cluster; 12..23 re-arrive
+    b2 = spark.createDataFrame(_far(range(12, 36)), EMB_SCHEMA)
+    dirs = _pq_stores(spark, tmp_path, [b1, b2])
+    _drift_step(spark, dirs, 1, b2, 200000)
 
-    dim = 8
-    b1 = spark.createDataFrame(
-        [(i, [float((i % 3) + 1)] * dim) for i in range(24)], EMB_SCHEMA
-    )
-    # ids 12..23 re-arrive corrected (shifted with the new cluster)
-    b2 = spark.createDataFrame(
-        [(12 + i, [1000.0 + float(i % 3)] * dim) for i in range(24)],
-        EMB_SCHEMA,
-    )
-    src_dir = tmp_path / "src"
-    src_dir.mkdir()
-    idx = str(tmp_path / "index")
-    ckpt = str(tmp_path / "ckpt")
-    args = dict(recon_ppm_threshold=200000)
-
-    _land(tmp_path, src_dir, b1, "b1")
-    run_streaming_pq_ingest_with_rebuild(spark, str(src_dir), idx, ckpt, **args)
-    _land(tmp_path, src_dir, b2, "b2")
-    run_streaming_pq_ingest_with_rebuild(spark, str(src_dir), idx, ckpt, **args)
-
-    audit = spark.read.parquet(idx + "/_rebuilds").collect()
+    audit = spark.read.parquet(dirs["audit"]).collect()
     assert len(audit) == 1 and audit[0]["post_ppm"] <= 200000
-    codes = spark.read.parquet(idx + "/codes")
+    codes = spark.read.parquet(dirs["codes"])
     # 0..35 distinct ids; every id exactly m rows (no duplicate-id fanout)
     assert codes.select("vec_id").distinct().count() == 36
     per_id = codes.groupBy("vec_id").count().select("count").distinct()
@@ -522,6 +555,16 @@ def test_tick_pq_leg_rebuilds_on_drift_and_replays_stable(spark, tmp_path):
     )
     assert got0 == want0
 
+    # and the published books really are back under threshold on the
+    # whole kept-embedding archive
+    from experts_etl_spark.llm.pq import pq_recon_ppm
+    from experts_etl_spark.streaming.stores import read_store
+
+    archive = read_store(spark, out + "/_kept_embeddings", drop_batch_id=True)
+    assert pq_recon_ppm(
+        archive, spark.read.parquet(books_dir), "vec_id", "embedding"
+    ) <= 200000
+
     # re-drain: no new files — one rebuild total, books byte-stable,
     # index byte-stable
     before = sorted(map(tuple, pq.collect()))
@@ -597,11 +640,29 @@ def test_tick_sem_store_rebuilds_srp_width_on_occupancy(spark, tmp_path):
     ).count() == 0
     assert not glob.glob(store_dir + "/_srp_meta_next/*")
 
+    assert meta["n_kept"] == 20
+
     _land(tmp_path, src_dir, b2, "b2")
     _tick()
     r2 = _reasons(spark, {"out": out}, 1)
     assert r2[100] == "semantic_duplicate"  # probed at the rebuilt width
     assert r2[101] is None
+    # the tick's decisions equal the direct incremental call at the
+    # rebuilt width, whether the store's buckets are read precomputed
+    # or recomputed from the vectors (one candidate set)
+    from experts_etl_spark.llm.similarity import semantic_dedup_incremental
+
+    store_b1 = (
+        spark.read.parquet(store_dir)
+        .filter(F.col("batch_id") == 0)
+        .drop("batch_id")
+    )
+    b2_embs = embs.filter(F.col("vec_id") >= 100)
+    for probe_store in (store_b1, store_b1.drop("bucket")):
+        got = semantic_dedup_incremental(
+            b2_embs, probe_store, "vec_id", "embedding", 0.35, want_bits
+        ).collect()
+        assert {r["vec_id"]: r["kept"] for r in got} == {100: False, 101: True}
 
     # re-drain: everything byte-stable, width unchanged
     def snap():
@@ -621,55 +682,34 @@ def test_tick_sem_store_rebuilds_srp_width_on_occupancy(spark, tmp_path):
 def test_pq_rebuild_deletes_fully_superseded_code_partitions(
     spark, tmp_path
 ):
-    """r12 ADVICE: a batch whose EVERY id re-arrives corrected in a
-    later batch contributes zero rows to the rebuild's staged output,
-    so dynamic partition overwrite alone would leave its old
-    codes/batch_id=N partition standing — rows encoded under the OLD
-    books, duplicate vec_ids in the index.  The rebuild must delete
-    such partitions and the published index must carry exactly one
-    code set per archived id."""
-    from experts_etl_spark.streaming.ann_index import (
-        run_streaming_pq_ingest_with_rebuild,
-    )
+    """A batch whose EVERY id re-arrives corrected in a later batch
+    contributes zero rows to the rebuild's staged output, so dynamic
+    partition overwrite alone would leave its old codes partition
+    standing — rows encoded under the OLD books, duplicate vec_ids in
+    the index.  The rebuild must delete such partitions and the
+    published index must carry exactly one code set per archived
+    id."""
+    from experts_etl_spark.llm.pq import pq_recon_ppm
 
-    dim = 8
-    b1 = spark.createDataFrame(
-        [(i, [float((i % 3) + 1)] * dim) for i in range(24)], EMB_SCHEMA
-    )
+    b1 = spark.createDataFrame(_tight(range(24)), EMB_SCHEMA)
     # the SAME ids 0..23, all corrected into a far cluster -> batch 0
     # is fully superseded AND the shift forces a rebuild
-    b2 = spark.createDataFrame(
-        [(i, [1000.0 + float(i % 3)] * dim) for i in range(24)],
-        EMB_SCHEMA,
-    )
-    src_dir = tmp_path / "src"
-    src_dir.mkdir()
-    idx = str(tmp_path / "index")
-    ckpt = str(tmp_path / "ckpt")
-    args = dict(recon_ppm_threshold=200000)
+    b2 = spark.createDataFrame(_far(range(24)), EMB_SCHEMA)
+    dirs = _pq_stores(spark, tmp_path, [b1, b2])
+    assert glob.glob(dirs["codes"] + "/batch_id=0/*.parquet")
 
-    _land(tmp_path, src_dir, b1, "b1")
-    run_streaming_pq_ingest_with_rebuild(spark, str(src_dir), idx, ckpt, **args)
-    assert glob.glob(idx + "/codes/batch_id=0/*.parquet")
-
-    _land(tmp_path, src_dir, b2, "b2")
-    run_streaming_pq_ingest_with_rebuild(spark, str(src_dir), idx, ckpt, **args)
-    assert len(spark.read.parquet(idx + "/_rebuilds").collect()) == 1
+    _drift_step(spark, dirs, 1, b2, 200000)
+    assert len(spark.read.parquet(dirs["audit"]).collect()) == 1
     # the fully-superseded partition is GONE, not a stale old-book copy
-    assert not glob.glob(idx + "/codes/batch_id=0")
-    codes = spark.read.parquet(idx + "/codes")
+    assert not glob.glob(dirs["codes"] + "/batch_id=0")
+    codes = spark.read.parquet(dirs["codes"])
     assert codes.select("vec_id").distinct().count() == 24
     per_id = codes.groupBy("vec_id").count().select("count").distinct()
     assert [r["count"] for r in per_id.collect()] == [2]  # m=2 at dim 8
     assert codes.select("batch_id").distinct().collect()[0][0] == 1
     # and the published codes decode against the PUBLISHED books
-    from experts_etl_spark.llm.pq import pq_recon_ppm
-
-    corpus = spark.read.parquet(idx + "/_embeddings").filter(
-        F.col("batch_id") == 1
-    ).drop("batch_id")
-    books = spark.read.parquet(idx + "/_books")
-    assert pq_recon_ppm(corpus, books, "vec_id", "embedding") <= 200000
+    books = spark.read.parquet(dirs["books"])
+    assert pq_recon_ppm(b2, books, "vec_id", "embedding") <= 200000
 
 
 def test_resolve_recon_threshold_floor_and_measured_margin(spark, tmp_path):
@@ -707,96 +747,37 @@ def test_pq_rebuild_veto_leaves_published_codes_untouched(spark, tmp_path):
     old partitions — byte-untouched.  A veto path that mutates the
     table would break the write-audit-publish contract the rebuild
     documents."""
-    from experts_etl_spark.llm.pq import pq_encode_incremental, pq_train
     from experts_etl_spark.streaming.ann_index import maybe_rebuild_pq_index
 
-    dim = 8
     # batch 0 fully superseded: every id re-arrives in batch 1 with
     # diverse (non-representable) vectors, so intrinsic recon error > 0
     # and threshold=0 is unreachable → the rebuild MUST veto.
-    b1 = spark.createDataFrame(
-        [(i, [float((i % 3) + 1)] * dim) for i in range(24)], EMB_SCHEMA
-    )
+    b1 = spark.createDataFrame(_tight(range(24)), EMB_SCHEMA)
     b2 = spark.createDataFrame(
-        [(i, [float((i * (j + 2)) % 37) for j in range(dim)])
+        [(i, [float((i * (j + 2)) % 37) for j in range(8)])
          for i in range(24)],
         EMB_SCHEMA,
     )
-    idx = tmp_path / "index"
-    arch, codes = str(idx / "_embeddings"), str(idx / "codes")
-    for bid, b in ((0, b1), (1, b2)):
-        b.write.parquet(f"{arch}/batch_id={bid}")
-    _, books = pq_train(b1, "vec_id", "embedding", iters=1)
-    books.write.parquet(str(idx / "_books"))
-    for bid, b in ((0, b1), (1, b2)):
-        pq_encode_incremental(b, books, "vec_id", "embedding").write.parquet(
-            f"{codes}/batch_id={bid}"
-        )
-    before = sorted(map(tuple, spark.read.parquet(codes).collect()))
+    dirs = _pq_stores(spark, tmp_path, [b1, b2])
+    codes = dirs["codes"]
+    before = _rows(spark.read.parquet(codes))
+    books = _rows(spark.read.parquet(dirs["books"]))
 
     with pytest.raises(RuntimeError, match="publish vetoed"):
         maybe_rebuild_pq_index(
             spark,
-            arch_dir=arch,
+            arch_dir=dirs["arch"],
             codes_dir=codes,
-            books_dir=str(idx / "_books"),
-            audit_dir=str(idx / "_rebuilds"),
+            books_dir=dirs["books"],
+            audit_dir=dirs["audit"],
             batch_id=1,
             pre_ppm=10**6,
             recon_ppm_threshold=0,
         )
     # stale-but-published partition still present; table byte-identical
     assert glob.glob(codes + "/batch_id=0/*.parquet")
-    after = sorted(map(tuple, spark.read.parquet(codes).collect()))
-    assert after == before
-    books_after = sorted(
-        map(tuple, spark.read.parquet(str(idx / "_books")).collect())
-    )
-    assert books_after == sorted(map(tuple, books.collect()))
-
-
-def test_pq_bootstrap_exemption_is_content_based_not_batch_id(
-    spark, tmp_path
-):
-    """r12 ADVICE: foreachBatch ids restart at 0 under a fresh
-    checkpoint dir, so the bootstrap drift-check exemption must key on
-    the bootstrap batch's CONTENT, not its batch_id — the first batch
-    of genuinely NEW drifting data in a re-pointed run (batch_id 0 ==
-    bootstrap id) must still arm the check and fire the rebuild."""
-    from experts_etl_spark.streaming.ann_index import (
-        run_streaming_pq_ingest_with_rebuild,
-    )
-
-    dim = 8
-    b1 = spark.createDataFrame(
-        [(i, [float((i % 3) + 1)] * dim) for i in range(24)], EMB_SCHEMA
-    )
-    b2 = spark.createDataFrame(
-        [(100 + i, [1000.0 + float(i % 3)] * dim) for i in range(24)],
-        EMB_SCHEMA,
-    )
-    src1 = tmp_path / "src1"
-    src1.mkdir()
-    src2 = tmp_path / "src2"
-    src2.mkdir()
-    idx = str(tmp_path / "index")
-    args = dict(recon_ppm_threshold=200000)
-
-    _land(tmp_path, src1, b1, "b1")
-    run_streaming_pq_ingest_with_rebuild(
-        spark, str(src1), idx, str(tmp_path / "ckpt1"), **args
-    )
-    assert not glob.glob(idx + "/_rebuilds/*")
-
-    # re-pointed run: fresh source + fresh checkpoint, SAME index.
-    # b2 arrives as batch_id 0 — the bootstrap id — but its content
-    # differs, so drift must be measured and the rebuild must fire.
-    _land(tmp_path, src2, b2, "b2")
-    run_streaming_pq_ingest_with_rebuild(
-        spark, str(src2), idx, str(tmp_path / "ckpt2"), **args
-    )
-    audit = spark.read.parquet(idx + "/_rebuilds").collect()
-    assert len(audit) == 1 and audit[0]["pre_ppm"] > 200000
+    assert _rows(spark.read.parquet(codes)) == before
+    assert _rows(spark.read.parquet(dirs["books"])) == books
 
 
 def test_tick_probes_meta_width_even_with_maintenance_off(spark, tmp_path):
